@@ -84,11 +84,14 @@ class EngineConf:
     # for tiny corpora). Salting is a perf knob only — the WAND handles
     # any layout (shared rows fan out + residue-mask).
     salt_min_df: int = 1000
-    salt_df_threshold: int = 100_000  # legacy knob (r1/r2 hot rule)
-    # relative salting floor: a term is hot when df exceeds
-    # min(salt_df_threshold, max(1000, salt_df_frac * n_docs)) — adapts
-    # the stopword split to corpus size (HighFrequencyTermShortcuts
-    # analog picks its term set the same relative way)
+    # skew cap: the salting threshold never exceeds this df, so no
+    # reducer owns more than this many postings of one term
+    # (build._effective_salt_min_df); also caps the HF-shortcut df
+    # threshold (index/shortcuts.py)
+    salt_df_threshold: int = 100_000
+    # HF-shortcut term set: df >= min(salt_df_threshold,
+    # max(1000, salt_df_frac * n_docs)) — relative to corpus size, the
+    # way HighFrequencyTermShortcuts picks its terms
     salt_df_frac: float = 0.05
     max_positions_per_doc: int = 255  # tf cap per (term,doc) blob entry
 

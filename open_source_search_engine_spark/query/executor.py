@@ -261,7 +261,7 @@ class IndexReader:
         analog) — empty unless conf.use_hf_shortcuts and the table
         exists."""
         if self._hf_ids is None:
-            if getattr(self.conf, "use_hf_shortcuts", False):
+            if self.conf.use_hf_shortcuts:
                 from ..index.shortcuts import shortcut_ids
 
                 self._hf_ids = shortcut_ids(self.spark, self.paths.root)
@@ -1676,7 +1676,7 @@ def _search_reference(spark, rd: IndexReader, cq: CompiledQuery,
     # keep it too: a doc's body (gen g) and incoming-link-text
     # (gen g+1) rows can both surface pre-compaction, and their exact
     # merge is position-ordered (within one gen the build's
-    # _merge_runs already combined every (term, salt) into a single
+    # C2 merge already combined every (term, salt) into a single
     # deduped blob; without anchors a later gen only ever REPLACES a
     # doc via newest-wins, so one row per (term, doc) is guaranteed —
     # the meta's has_anchors flag records it, defaulting conservative
@@ -1689,7 +1689,7 @@ def _search_reference(spark, rd: IndexReader, cq: CompiledQuery,
         return _reference_single_term(spark, rd, cq, k, conf, dfs)
     if (k is not None and not cq.quoted_runs and not hf_substituted
             and sum(dfs.values())
-            >= getattr(conf, "ref_two_pass_min_postings", 100_000)):
+            >= conf.ref_two_pass_min_postings):
         return _search_reference_two_pass(spark, rd, cq, k, conf, dfs)
     return _reference_exact(spark, rd, cq, k, conf, dfs)
 
@@ -1733,7 +1733,7 @@ def _reference_single_term(spark, rd: IndexReader, cq: CompiledQuery,
         neg_tids = [g.term_ids[0] for g in cq.negative_groups]
         neg_docs = rd.postings(neg_tids).select("doc_id").distinct()
         posts = posts.join(neg_docs, "doc_id", "left_anti")
-    use_pt = bool(getattr(conf, "use_page_temperature", False))
+    use_pt = conf.use_page_temperature
     if use_pt:
         from .pagetemp import scaled_temp_frame
 
@@ -2121,7 +2121,7 @@ def _reference_candidates(spark, rd: IndexReader, cq: CompiledQuery,
                    F.lit(float(weights.same_lang_w)))
             .when(lang == F.lit(0), F.lit(float(weights.unknown_lang_w)))
             .otherwise(F.lit(1.0)))
-    if bool(getattr(conf, "use_page_temperature", False)):
+    if conf.use_page_temperature:
         from .pagetemp import scaled_temp_frame
 
         ptf, pt_default = scaled_temp_frame(spark, rd.paths.root, conf)
@@ -2217,7 +2217,7 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
 
     # page-temperature registry (query/pagetemp.py): distributed join,
     # unregistered docs coalesce to the default-temperature multiplier
-    use_pt = bool(getattr(conf, "use_page_temperature", False))
+    use_pt = conf.use_page_temperature
     if use_pt:
         from .pagetemp import scaled_temp_frame
 
@@ -2578,9 +2578,7 @@ def _search_boolean_reference(spark, rd: IndexReader, cq: CompiledQuery,
     # the least() chains). Small sets skip the extra job.
     tids = [int(g.term_ids[0]) for g in cq.positive_groups]
     if (k is not None and tids
-            and len(cand) >= getattr(conf,
-                                     "ref_two_pass_min_postings",
-                                     100_000) // 10):
+            and len(cand) >= conf.ref_two_pass_min_postings // 10):
         dfs = rd.df_of(tids)
         return _search_reference_two_pass(spark, rd, cq, k, conf, dfs,
                                           candidate_docs=cand,

@@ -138,18 +138,14 @@ class ScoringWeights:
             [math.sqrt(1.0 + i) for i in range(MAXWORDSPAMRANK + 1)],
             dtype=np.float32)
         self.hashgroup = np.asarray(conf.hashgroup_weights, dtype=np.float32)
-        self.syn = np.float32(getattr(conf, "syn_weight", 0.9))
+        self.syn = np.float32(conf.syn_weight)
         # language boost (PosdbTable.cpp:4254-4275; 0 = off)
-        self.query_lang = int(getattr(conf, "query_lang", 0))
-        self.same_lang_w = np.float32(getattr(conf, "same_lang_weight",
-                                              20.0))
-        self.unknown_lang_w = np.float32(getattr(conf,
-                                                 "unknown_lang_weight",
-                                                 10.0))
+        self.query_lang = int(conf.query_lang)
+        self.same_lang_w = np.float32(conf.same_lang_weight)
+        self.unknown_lang_w = np.float32(conf.unknown_lang_weight)
         # page temperature (PosdbTable.cpp:4268-4277; off unless the
         # registry multiplier is enabled)
-        self.use_page_temp = bool(getattr(conf, "use_page_temperature",
-                                          False))
+        self.use_page_temp = bool(conf.use_page_temperature)
 
 
 class TermList:

@@ -15,7 +15,7 @@ from open_source_search_engine_spark.functions.codec import (
     decode_headers,
     decode_postings,
     encode_postings,
-    merge_blobs,
+    merge_runs_many,
 )
 
 
@@ -98,11 +98,24 @@ def _blob(doc_ids, tf=1, dl=10, base_pos=5):
                            ctxs, np.zeros(n, dtype=np.uint64))
 
 
+def _merge_one(blobs, gens=None, events=None):
+    """merge_runs_many over ONE group; ``events`` maps doc -> keep_gen.
+    Returns the merged blob, or None when the group died."""
+    edocs = egens = None
+    if events:
+        edocs = np.array(sorted(events), dtype=np.uint64)
+        egens = np.array([events[d] for d in sorted(events)],
+                         dtype=np.int64)
+    kept, out, _, _, _ = merge_runs_many(
+        [blobs], None if gens is None else [gens], edocs, egens)
+    return out[0] if len(kept) else None
+
+
 def test_merge_newest_wins():
     # RdbListTest MergeTestPosdbVerifyListOrder analog
     old = _blob([10, 20, 30], tf=1, dl=10)
     new = _blob([20], tf=3, dl=99)
-    d = decode_postings(merge_blobs([old, new]))
+    d = decode_postings(_merge_one([old, new], gens=[0, 1]))
     np.testing.assert_array_equal(d["doc_ids"], [10, 20, 30])
     assert d["tfs"][1] == 3  # doc 20 replaced by the newer version
     assert d["doclens"][1] == 99
@@ -111,8 +124,7 @@ def test_merge_newest_wins():
 def test_merge_delete_annihilates():
     # MergeTestPosdbVerifyRemoveNegRecords analog
     b = _blob([1, 2, 3, 4])
-    d = decode_postings(
-        merge_blobs([b], deleted_doc_ids=np.array([2, 4], dtype=np.uint64)))
+    d = decode_postings(_merge_one([b], gens=[0], events={2: -1, 4: -1}))
     np.testing.assert_array_equal(d["doc_ids"], [1, 3])
 
 
@@ -120,8 +132,33 @@ def test_merge_multiway_order():
     b1 = _blob([5, 50])
     b2 = _blob([10, 40])
     b3 = _blob([1, 100])
-    d = decode_postings(merge_blobs([b1, b2, b3]))
+    d = decode_postings(_merge_one([b1, b2, b3]))
     np.testing.assert_array_equal(d["doc_ids"], [1, 5, 10, 40, 50, 100])
+
+
+def test_merge_compaction_events():
+    """Compaction cases of the doc-event map: a doc tombstoned and then
+    re-indexed at a later gen survives (its newest version only); a run
+    whose docs are all dead is dropped; a doc whose event names a gen
+    absent from the run is dropped."""
+    g0 = _blob([1, 2, 3], tf=1, dl=10)
+    g2 = _blob([2], tf=2, dl=77)
+    # doc 2: tombstoned at gen 1, re-added at gen 2 -> keep_gen 2
+    d = decode_postings(_merge_one([g0, g2], gens=[0, 2],
+                                   events={2: 2, 3: -1}))
+    np.testing.assert_array_equal(d["doc_ids"], [1, 2])
+    assert d["tfs"][1] == 2 and d["doclens"][1] == 77
+    # every doc dead -> the run is dropped, not emitted empty
+    assert _merge_one([g0], gens=[0],
+                      events={1: -1, 2: -1, 3: -1}) is None
+    # doc 3's newest version lives in a gen this run has no blob of
+    d = decode_postings(_merge_one([g0, g2], gens=[0, 2], events={3: 5}))
+    np.testing.assert_array_equal(d["doc_ids"], [1, 2])
+    # only the dropped groups leave the output
+    kept, blobs, df, _, _ = merge_runs_many(
+        [[g0], [g2]], [[0], [2]], np.array([1, 2, 3], dtype=np.uint64),
+        np.array([-1, 2, -1], dtype=np.int64))
+    assert list(kept) == [1] and list(df) == [1] and blobs == [g2]
 
 
 def test_compression_is_compact():
@@ -330,17 +367,18 @@ def test_png_codec_property(h, w, seed, gray):
 
 
 def test_merge_disjoint_blobs_many_byte_identical():
-    """Batched C2 merge must produce byte-identical blobs and identical
-    stats to per-group merge_disjoint_blobs — including groups with
-    duplicate docs across sources (body vs inlink-text partitions) and
-    multi-block results."""
+    """The batched merge kernel must produce byte-identical blobs and
+    identical stats to per-group merge_disjoint_blobs — including
+    groups with duplicate docs across sources (body vs inlink-text
+    partitions) and multi-block results — whether it is called as the
+    build calls it (one generation) or as compaction does (gens and an
+    event map that kills nothing)."""
     import numpy as np
 
     from open_source_search_engine_spark.functions.codec import (
         BlockMeta,
         encode_postings,
         merge_disjoint_blobs,
-        merge_disjoint_blobs_many,
     )
 
     rng = np.random.RandomState(11)
@@ -369,47 +407,47 @@ def test_merge_disjoint_blobs_many_byte_identical():
         [mk(0, 1), mk(10, 1), mk(20, 1)],
     ]
     want = [merge_disjoint_blobs(g) for g in groups]
-    got, df, cf, mx = merge_disjoint_blobs_many(groups)
-    assert len(got) == len(want)
-    for w, g in zip(want, got):
-        assert w == g
-    for i, b in enumerate(want):
-        m = BlockMeta(b)
-        assert df[i] == m.n_docs
-        assert cf[i] == int(m.npos.sum())
-        assert mx[i] == int(m.bmax_tf.max())
+    no_event = (np.array([1 << 40], dtype=np.uint64),
+                np.array([-1], dtype=np.int64))
+    for got_all in (merge_runs_many(groups),
+                    merge_runs_many(groups, [[3] * len(g) for g in groups],
+                                    *no_event)):
+        kept, got, df, cf, mx = got_all
+        assert list(kept) == list(range(len(groups)))
+        assert got == want
+        for i, b in enumerate(want):
+            m = BlockMeta(b)
+            assert df[i] == m.n_docs
+            assert cf[i] == int(m.npos.sum())
+            assert mx[i] == int(m.bmax_tf.max())
 
 
 def test_merge_disjoint_blobs_many_all_empty_groups():
-    """Every blob in every group empty: the batched merge must take the
-    per-group fallback instead of raising from an empty concatenate
-    (ADVICE r3 — public codec API, even though mini rows never hit it)."""
+    """Every blob in every group empty: the merge kernel drops every
+    group instead of raising from an empty concatenate (ADVICE r3 —
+    public codec API, even though mini rows never hit it)."""
     import numpy as np
 
     from open_source_search_engine_spark.functions.codec import (
         encode_postings,
-        merge_disjoint_blobs_many,
     )
 
     e = np.empty(0, dtype=np.uint64)
     empty_blob = encode_postings(e, e, e, e, e, e)
     groups = [[empty_blob], [empty_blob, empty_blob]]
-    blobs, df, cf, mx = merge_disjoint_blobs_many(groups)
-    assert len(blobs) == 2
-    assert list(df) == [0, 0]
-    assert list(cf) == [0, 0]
-    assert list(mx) == [0, 0]
+    kept, blobs, df, cf, mx = merge_runs_many(groups)
+    assert len(kept) == 0 and blobs == []
+    assert len(df) == len(cf) == len(mx) == 0
 
 
 def test_merge_disjoint_blobs_many_one_empty_group():
-    """A mixed batch where ONE group decodes empty: per-group fallback
-    results must match merge_disjoint_blobs for the non-empty groups."""
+    """A mixed batch where ONE group decodes empty: the kernel drops
+    it, and the non-empty group matches merge_disjoint_blobs."""
     import numpy as np
 
     from open_source_search_engine_spark.functions.codec import (
         encode_postings,
         merge_disjoint_blobs,
-        merge_disjoint_blobs_many,
     )
 
     e = np.empty(0, dtype=np.uint64)
@@ -422,11 +460,12 @@ def test_merge_disjoint_blobs_many_one_empty_group():
     rks = np.array([5, 6], dtype=np.uint64)
     full = encode_postings(docs, tfs, dls, pos, ctx, rks)
     groups = [[empty_blob], [full]]
-    blobs, df, cf, mx = merge_disjoint_blobs_many(groups)
-    assert blobs[1] == merge_disjoint_blobs([full])
-    assert list(df) == [0, 2]
-    assert list(cf) == [0, 3]
-    assert mx[1] == 2
+    kept, blobs, df, cf, mx = merge_runs_many(groups)
+    assert list(kept) == [1]
+    assert blobs == [merge_disjoint_blobs([full])]
+    assert list(df) == [2]
+    assert list(cf) == [3]
+    assert list(mx) == [2]
 
 
 def test_pfor_docid_codec_parity():
@@ -452,6 +491,10 @@ def test_pfor_docid_codec_parity():
     )
 
     assert b4[0] == (4 | FRONTIER_FLAG) and b3[0] == (3 | FRONTIER_FLAG)
+    # v2 (pre-bctx meta) is no longer read: it fails with the gap named
+    for v2 in (bytes([2]) + b3[1:], bytes([2 | FRONTIER_FLAG]) + b3[1:]):
+        with pytest.raises(ValueError, match="bad codec version"):
+            BlockMeta(v2)
     d3 = decode_blocks(b3, with_positions=True)
     d4 = decode_blocks(b4, with_positions=True)
     for k in ("doc_ids", "tfs", "doclens", "ranks", "positions",
@@ -528,7 +571,6 @@ def test_pfor_all_mixed_version_merge():
     blob re-encodes in whichever codec the conf asks for."""
     from open_source_search_engine_spark.functions.codec import (
         merge_disjoint_blobs,
-        merge_disjoint_blobs_many,
     )
 
     rng = np.random.default_rng(5)
@@ -545,7 +587,7 @@ def test_pfor_all_mixed_version_merge():
 
     for out_codec, ver in (("varint", 3), ("pfor_all", 5)):
         m1 = merge_disjoint_blobs(blobs, docid_codec=out_codec)
-        (m2,), _, _, _ = merge_disjoint_blobs_many(
+        _, (m2,), _, _, _ = merge_runs_many(
             [blobs], docid_codec=out_codec)
         assert m1 == m2 and m1[0] == (ver | FRONTIER_FLAG)
         d = decode_postings(m1)
@@ -581,14 +623,13 @@ def test_pfor_all_bulk_encode_byte_parity():
 
 
 def test_merge_empty_blob_lists():
-    """ADVICE r4: merging no blobs (or only empty blobs) returns a
-    well-formed empty blob instead of a numpy concatenate ValueError —
-    both the per-group and the batched merge."""
+    """ADVICE r4: merging no blobs (or only empty blobs) does not raise
+    a numpy concatenate ValueError: the per-group reference returns a
+    well-formed empty blob, the merge kernel drops the group."""
     from open_source_search_engine_spark.functions.codec import (
         decode_postings,
         encode_postings,
         merge_disjoint_blobs,
-        merge_disjoint_blobs_many,
     )
 
     z = np.empty(0, dtype=np.uint64)
@@ -598,15 +639,13 @@ def test_merge_empty_blob_lists():
         out = merge_disjoint_blobs(blobs)
         assert len(decode_postings(out)["doc_ids"]) == 0
 
-    blobs, df, cf, mtf = merge_disjoint_blobs_many([[], [empty_blob]])
-    assert list(df) == [0, 0] and list(cf) == [0, 0]
-    assert all(len(decode_postings(b)["doc_ids"]) == 0 for b in blobs)
+    kept, blobs, df, cf, mtf = merge_runs_many([[], [empty_blob]])
+    assert len(kept) == 0 and blobs == [] and len(df) == 0
 
     # mixed: one real group + one all-empty group still round-trips
     rng = np.random.default_rng(7)
     d, t, dl, p, c, r = make_postings(rng, 5)
     real = encode_postings(d, t, dl, p, c, r)
-    blobs, df, cf, mtf = merge_disjoint_blobs_many([[real], []])
-    assert list(df) == [5, 0]
+    kept, blobs, df, cf, mtf = merge_runs_many([[real], []])
+    assert list(kept) == [0] and list(df) == [5]
     assert np.array_equal(decode_postings(blobs[0])["doc_ids"], d)
-    assert len(decode_postings(blobs[1])["doc_ids"]) == 0

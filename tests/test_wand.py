@@ -361,7 +361,7 @@ def test_frontier_legacy_blobs_decode_and_merge():
         BlockMeta,
         decode_postings,
         encode_postings,
-        merge_blobs,
+        merge_runs_many,
     )
 
     rng = np.random.default_rng(3)
@@ -370,7 +370,8 @@ def test_frontier_legacy_blobs_decode_and_merge():
     new = encode_postings(docs + np.uint64(10 * 300 + 7), tfs, dls, pos,
                           ctx, rks, docid_codec="pfor")
     assert BlockMeta(old).bdl_tf2 is None
-    merged = merge_blobs([old, new], docid_codec="pfor")
+    _, (merged,), _, _, _ = merge_runs_many([[old, new]], [[0, 1]],
+                                            docid_codec="pfor")
     mm = BlockMeta(merged)
     assert mm.frontier and mm.bdl_tf2 is not None
     d = decode_postings(merged)
