@@ -54,9 +54,30 @@ def _index_dir(sf_dir: str, flavor: str) -> str:
     key = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{flavor}:v{CODEC_VERSION}"
         f".{INDEX_FORMAT_VERSION}.w{wrapper_v}"
-        f".c{DEFAULT_CONF.docid_codec}".encode()
+        f".c{DEFAULT_CONF.docid_codec}.s{_build_source_digest()}".encode()
     ).hexdigest()[:12]
     return os.path.join("/tmp", f"osse_idx_{flavor}_{key}")
+
+
+def _build_source_digest() -> str:
+    """Digest of the sources an index build runs (the build, the
+    per-row functions and the webtext wrapper): a build change that
+    keeps the version numbers still gets fresh cached indexes."""
+    import glob
+
+    import open_source_search_engine_spark as pkg
+
+    root = os.path.dirname(os.path.abspath(pkg.__file__))
+    files = sorted(
+        [os.path.join(root, "index", "build.py"),
+         os.path.join(root, "sources", "webtext.py")]
+        + glob.glob(os.path.join(root, "functions", "*.py")))
+    h = hashlib.md5()
+    for path in files:
+        with open(path, "rb") as f:
+            h.update(os.path.relpath(path, root).encode() + b"\0"
+                     + f.read())
+    return h.hexdigest()[:12]
 
 
 def _ensure_base_index(spark: SparkSession, sf_dir: str) -> str:

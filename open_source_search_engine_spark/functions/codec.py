@@ -1243,6 +1243,31 @@ def merge_disjoint_blobs(blobs: list[bytes],
         u_rk.astype(np.uint64), docid_codec=docid_codec)
 
 
+def span_index(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Indices of the spans ``[starts[i], starts[i] + lens[i])`` of a
+    flat posting array, concatenated in order: the gather of chosen
+    docs' positions/ctxs."""
+    ends = np.cumsum(lens)
+    return (np.arange(int(ends[-1]) if len(ends) else 0, dtype=np.int64)
+            - np.repeat(ends - lens, lens) + np.repeat(starts, lens))
+
+
+def live_mask(docs: np.ndarray, gen, edocs: np.ndarray,
+              egens: np.ndarray) -> np.ndarray:
+    """Newest-wins liveness of postings of ``docs`` at generation
+    ``gen`` (scalar or per-posting) against the doc-event map
+    (``build.compute_doc_events``; ``edocs`` sorted, ``egens`` the
+    keep_gen, -1 = tombstoned): live iff the doc has no event, its
+    keep_gen is ``gen``, or ``gen`` is -1 (rows of an HF shortcut list,
+    already gen-resolved) and the doc is not tombstoned
+    (RdbList.cpp:1945-2043 negative-key annihilation)."""
+    if not len(edocs):
+        return np.ones(len(docs), dtype=bool)
+    ei = np.clip(np.searchsorted(edocs, docs), 0, len(edocs) - 1)
+    keep = egens[ei]
+    return (edocs[ei] != docs) | (keep == gen) | ((gen == -1) & (keep != -1))
+
+
 def merge_runs_many(
     groups: list[list[bytes]],
     gens: list[list[int]] | None = None,
@@ -1295,8 +1320,7 @@ def merge_runs_many(
     starts = np.cumsum(tfs) - tfs   # each doc's span in pos/ctx
     rows = np.arange(len(docs), dtype=np.int64)
     if edocs is not None and len(edocs):
-        ei = np.clip(np.searchsorted(edocs, docs), 0, len(edocs) - 1)
-        rows = rows[(edocs[ei] != docs) | (egens[ei] == gen)]
+        rows = rows[live_mask(docs, gen, edocs, egens)]
         if not len(rows):
             return e, [], e, e, e
     # stable (group, doc[, gen]) order == per-group argsort(docs, stable)
@@ -1314,11 +1338,7 @@ def merge_runs_many(
     s_grp = grp[order]
     s_docs = docs[order]
     s_tf = tfs[order]
-    total = int(s_tf.sum())
-    ends = np.cumsum(s_tf)
-    idx = (np.arange(total, dtype=np.int64)
-           - np.repeat(ends - s_tf, s_tf)
-           + np.repeat(starts[order], s_tf))
+    idx = span_index(starts[order], s_tf)
     pos_out = pos[idx].astype(np.uint64)
     ctx_out = ctx[idx].astype(np.uint64)
 

@@ -1452,10 +1452,8 @@ def compact_index(spark: SparkSession, index_dir: str,
         conflicted = (appearances.groupBy("doc_id")
                       .agg(F.count("*").alias("n"))
                       .where(F.col("n") >= 2).select("doc_id"))
-        ev = (events.join(conflicted, "doc_id", "left_semi").toPandas()
-              .sort_values("doc_id"))
-        edocs = ev["doc_id"].to_numpy(np.uint64)
-        egens = ev["keep_gen"].to_numpy(np.int64)
+        edocs, egens = doc_event_arrays(
+            events.join(conflicted, "doc_id", "left_semi"))
     else:
         edocs = egens = None
 
@@ -1654,6 +1652,14 @@ def compute_doc_events(spark: SparkSession, paths: IndexPaths,
             .otherwise(F.col("ev.gen")).alias("keep_gen"),
         )
     )
+
+
+def doc_event_arrays(events: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """A ``compute_doc_events`` frame collected as the sorted
+    (doc_id uint64, keep_gen int64) numpy pair that the merge kernel
+    and ``codec.live_mask`` take."""
+    ev = events.toPandas().sort_values("doc_id")
+    return ev["doc_id"].to_numpy(np.uint64), ev["keep_gen"].to_numpy(np.int64)
 
 
 def _manifest_path(paths: IndexPaths, gen: int, bucket: int) -> str:

@@ -96,6 +96,7 @@ class IndexReader:
         self._df_cache: dict[int, int] = {}
         self._seg_scan_cache: dict[tuple, DataFrame] = {}
         self._sketch_cache: dict[int, dict[int, int]] = {}
+        self._event_arrays = None
 
     def _gen_dirs(self, table: str) -> list[str]:
         base = getattr(self.paths, table)
@@ -436,6 +437,20 @@ class IndexReader:
         from ..index.build import compute_doc_events
 
         return compute_doc_events(self.spark, self.paths, self.gens)
+
+    def doc_event_arrays(self) -> tuple[np.ndarray, np.ndarray] | None:
+        """``doc_events`` as a sorted (doc_id uint64, keep_gen int64)
+        numpy pair for in-UDF newest-wins masking
+        (``codec.live_mask``), collected once per reader — the same
+        delta-sized form ``build.compact_index`` hands the merge
+        kernel. None when the snapshot has no events."""
+        if self._event_arrays is None:
+            from ..index.build import doc_event_arrays
+
+            ev = self.doc_events()
+            self._event_arrays = (False if ev is None
+                                  else doc_event_arrays(ev))
+        return self._event_arrays or None
 
     def _newest_wins(self, decoded: DataFrame) -> DataFrame:
         """Drop shadowed/deleted postings: a posting of doc d at gen g
@@ -1285,15 +1300,21 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
     return wand_group
 
 
-def _wand_seg_frame(rd: IndexReader, tids: list[int], n_salts: int
-                    ) -> DataFrame:
+def _wand_seg_frame(rd: IndexReader, tids: list[int], n_salts: int,
+                    with_gen: bool = False) -> DataFrame:
     """Segment rows prepared for per-salt grouping: exact rows
     (salt >= 0) keep their group; shared rows (SALT_SHARED cold runs)
     fan out to EVERY group with a `shared` flag so the group body can
-    residue-mask them — correct for any hot/cold salt layout."""
-    seg = rd.segments_for(tids).select("term_id", "salt", "postings")
+    residue-mask them — correct for any hot/cold salt layout. An index
+    whose meta declares no doc-keyed salt layout (pre-v9) has every row
+    treated as shared. ``with_gen`` keeps each row's generation."""
+    c = rd.meta.get("conf", {})
+    keyed = c.get("salt_scheme") is not None or c.get("salt_all", False)
+    seg = rd.segments_for(tids).select(
+        "term_id", "salt", "postings", *(["gen"] if with_gen else []))
     return (
-        seg.withColumn("shared", F.col("salt") < 0)
+        seg.withColumn("shared",
+                       F.col("salt") < 0 if keyed else F.lit(True))
         .withColumn(
             "salt",
             F.explode(
@@ -2154,9 +2175,17 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
     formula chain (refscore.score_doc: non-body matrix -> singles ->
     sliding window -> window-restricted pair scan -> min-combine +
     siterank). AND semantics over the positive groups (docid-vote
-    intersection, PosdbTable.cpp:2110-2196). Docs are batched ~hundreds
-    per pandas group (doc_id mod shuffle-width) so the per-group python
-    overhead amortizes — no per-doc applyInPandas calls."""
+    intersection, PosdbTable.cpp:2110-2196); require_all=False scores
+    every doc over the slots it has (boolean reference mode).
+
+    One ``groupBy("salt").applyInPandas`` stage over the compressed
+    blob rows (PLANS.md §23): each salt group decodes its blobs
+    (block-skipping to ``candidate_docs`` when given), drops postings
+    shadowed by a newer generation or a tombstone (``codec.live_mask``
+    over ``IndexReader.doc_event_arrays``) and docs with a live
+    negative-term posting, then scores from the flat position/ctx
+    arrays with the per-doc bound + top-k heap. The exchange carries
+    blob rows only; no decoded posting row leaves Python."""
     from .refscore import (
         ScoringWeights,
         score_doc,
@@ -2208,52 +2237,97 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                 syn_tids.add(st)
     all_tids = sorted(tid_slot)
 
-    posts = rd.postings(all_tids, with_positions=True,
-                        candidate_docs=candidate_docs)
-    if cq.negative_groups:
-        neg_tids = [g.term_ids[0] for g in cq.negative_groups]
-        neg_docs = rd.postings(neg_tids).select("doc_id").distinct()
-        posts = posts.join(neg_docs, "doc_id", "left_anti")
+    # per-shard decode-and-score (Msg39/PosdbTable), then the Msg3a
+    # top-k merge: salt groups hold disjoint doc sets (_wand_seg_frame),
+    # so every posting of a doc — positive, variant or negative term —
+    # meets in one group
+    neg_tids = {int(g.term_ids[0]) for g in cq.negative_groups}
+    n_salts = rd.meta.get("conf", {}).get("n_salts", rd.conf.n_salts)
+    seg = _wand_seg_frame(rd, sorted(set(all_tids) | neg_tids), n_salts,
+                          with_gen=True)
+    sc = spark.sparkContext
+    bc = (sc.broadcast(candidate_docs.astype(np.uint64))
+          if candidate_docs is not None else None)
+    events = rd.doc_event_arrays()
+    bc_ev = sc.broadcast(events) if events is not None else None
 
-    # page-temperature registry (query/pagetemp.py): distributed join,
-    # unregistered docs coalesce to the default-temperature multiplier
+    # page-temperature registry (query/pagetemp.py): corpus-sized, so it
+    # is co-grouped by the same doc residue, never collected;
+    # unregistered docs get the default-temperature multiplier
     use_pt = conf.use_page_temperature
+    ptf = None
     if use_pt:
         from .pagetemp import scaled_temp_frame
 
         ptf, pt_default = scaled_temp_frame(spark, rd.paths.root, conf)
-        if ptf is not None:
-            posts = (posts.join(ptf, "doc_id", "left")
-                     .withColumn("page_temp",
-                                 F.coalesce("page_temp",
-                                            F.lit(float(pt_default)))))
-        else:
-            posts = posts.withColumn("page_temp",
-                                     F.lit(float(pt_default)))
 
     from .refscore import SITERANK_MULTIPLIER, WIKI_BIGRAM_WEIGHT, \
         bound_factor_rows, precompute_postings, termlist_from_slices
 
-    def score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_group(pdf: pd.DataFrame,
+                    pt_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
         import heapq
+
+        from ..functions.codec import BlockMeta, blocks_for_candidates, \
+            live_mask, span_index
 
         if not len(pdf):
             return pd.DataFrame(columns=["doc_id", "score"])
-        pdf = pdf.sort_values("doc_id", kind="mergesort")
-        doc_arr = pdf["doc_id"].to_numpy()
-        tid_arr = pdf["term_id"].to_numpy()
-        rank_arr = pdf["rank"].to_numpy()
-        pos_col = pdf["positions"].to_numpy()
-        ctx_col = pdf["ctxs"].to_numpy()
-        # batch-global precompute: unpack + weights + per-posting single
-        # scores over the concatenated postings of EVERY row at once
-        lens = np.fromiter((len(p) for p in pos_col), dtype=np.int64,
-                           count=len(pdf))
+        salt = int(pdf["salt"].iloc[0])
+        cand = bc.value if bc is not None else None
+        # (term, gen) row order: the order a slot's rows of one doc
+        # merge in, independent of the exchange's arrival order
+        pdf = pdf.sort_values(["term_id", "gen"], kind="mergesort")
+        doc_l, tid_l, rank_l, tf_l, pos_l, ctx_l, neg_l = \
+            [], [], [], [], [], [], []
+        for tid, blob, g, shared in zip(pdf["term_id"], pdf["postings"],
+                                        pdf["gen"], pdf["shared"]):
+            t = int(tid)
+            is_pos = t in tid_slot
+            b = bytes(blob)
+            if cand is not None:
+                # skip-pointer seek: decode only blocks whose docId
+                # range intersects the candidate set (RdbMap analog)
+                meta = BlockMeta(b)
+                bsel = blocks_for_candidates(meta, cand)
+                if not len(bsel):
+                    continue
+                d = decode_blocks(b, bsel, is_pos, meta)
+            else:
+                d = decode_blocks(b, None, is_pos)
+            docs = d["doc_ids"]
+            keep = np.ones(len(docs), dtype=bool)
+            if shared:
+                keep &= (docs % np.uint64(n_salts)) == np.uint64(salt)
+            if cand is not None:
+                keep &= np.isin(docs, cand)
+            if bc_ev is not None:
+                keep &= live_mask(docs, int(g), *bc_ev.value)
+            if t in neg_tids:
+                neg_l.append(docs[keep])
+            if not is_pos or not keep.any():
+                continue
+            tfs = d["tfs"].astype(np.int64)
+            pos, ctx = d["positions"], d["ctxs"]
+            if not keep.all():
+                pix = span_index((np.cumsum(tfs) - tfs)[keep], tfs[keep])
+                pos, ctx, tfs = pos[pix], ctx[pix], tfs[keep]
+            doc_l.append(docs[keep])
+            tid_l.append(np.full(len(tfs), t, dtype=np.int64))
+            rank_l.append(d["ranks"][keep])
+            tf_l.append(tfs)
+            pos_l.append(pos)
+            ctx_l.append(ctx)
+        if not doc_l:
+            return pd.DataFrame(columns=["doc_id", "score"])
+        doc_arr = np.concatenate(doc_l).astype(np.int64)
+        tid_arr = np.concatenate(tid_l)
+        rank_arr = np.concatenate(rank_l).astype(np.int64)
+        lens = np.concatenate(tf_l)
         row_off = np.concatenate(([0], np.cumsum(lens)))
-        pos_all = np.concatenate(
-            [np.asarray(p, dtype=np.int64) for p in pos_col])
-        ctx_all = np.concatenate(
-            [np.asarray(c, dtype=np.int64) for c in ctx_col])
+        pos_all = np.concatenate(pos_l).astype(np.int64)
+        ctx_all = np.concatenate(ctx_l).astype(np.int64)
+        n_rows = len(doc_arr)
 
         # slot of each row; variant rows get the syn flag forced into
         # their ctx BEFORE precompute so the kernel's synW^2 applies
@@ -2270,10 +2344,27 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                 rep_syn = np.repeat(row_is_syn, lens)
                 ctx_all = np.where(rep_syn, (ctx_all & ~0x3) | 0x2,
                                    ctx_all)
+        # group-global precompute: unpack + weights + per-posting single
+        # scores over the flat postings of EVERY row at once
         pre = precompute_postings(pos_all, ctx_all, weights)
-        post_row = np.repeat(np.arange(len(pdf), dtype=np.int64), lens)
-        row_sum, pf_s, pf_g, pf_l = bound_factor_rows(
-            pre, post_row, len(pdf))
+        post_row = np.repeat(np.arange(n_rows, dtype=np.int64), lens)
+        row_sum, pf_s, pf_g, pf_l = bound_factor_rows(pre, post_row,
+                                                      n_rows)
+
+        # drop docs holding a live posting of a negative term, then put
+        # the rows in doc order (stable: (term, gen) order within a doc)
+        rows = np.arange(n_rows, dtype=np.int64)
+        if neg_l:
+            rows = rows[~np.isin(doc_arr,
+                                 np.concatenate(neg_l).astype(np.int64))]
+            if not len(rows):
+                return pd.DataFrame(columns=["doc_id", "score"])
+        rows = rows[np.argsort(doc_arr[rows], kind="stable")]
+        doc_arr, tid_arr, rank_arr, slot_arr = (
+            doc_arr[rows], tid_arr[rows], rank_arr[rows], slot_arr[rows])
+        row_sum, pf_s, pf_g, pf_l = (
+            row_sum[rows], pf_s[rows], pf_g[rows], pf_l[rows])
+        row_start, row_end = row_off[rows], row_off[rows + 1]
 
         bounds = np.flatnonzero(
             np.concatenate(([True], doc_arr[1:] != doc_arr[:-1])))
@@ -2343,7 +2434,15 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                 np.where(lang_doc == 0, float(weights.unknown_lang_w), 1.0))
         pt_doc = None
         if use_pt:
-            pt_doc = pdf["page_temp"].to_numpy()[bounds[:-1]]
+            pt_doc = np.full(n_docs_b, float(pt_default))
+            if pt_pdf is not None and len(pt_pdf):
+                pt_pdf = pt_pdf.sort_values("doc_id", kind="mergesort")
+                reg = pt_pdf["doc_id"].to_numpy(np.int64)
+                first = doc_arr[bounds[:-1]]
+                ix = np.clip(np.searchsorted(reg, first), 0, len(reg) - 1)
+                pt_doc = np.where(reg[ix] == first,
+                                  pt_pdf["page_temp"].to_numpy()[ix],
+                                  pt_doc)
             ub = ub * pt_doc  # positive multiplier scales the bound too
 
         order = (np.argsort(-ub) if k is not None
@@ -2372,7 +2471,7 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                 if len(rs) == 1:
                     r0 = rs[0]
                     terms.append(termlist_from_slices(
-                        pre, slice(row_off[r0], row_off[r0 + 1])))
+                        pre, slice(row_start[r0], row_end[r0])))
                     continue
                 # variant merge: primary sublist first, then syn
                 # sublists by termId (deterministic), positions
@@ -2381,7 +2480,7 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                 rs.sort(key=lambda r: (int(tid_arr[r]) in syn_tids,
                                        int(tid_arr[r])))
                 idx = np.concatenate(
-                    [np.arange(row_off[r], row_off[r + 1]) for r in rs])
+                    [np.arange(row_start[r], row_end[r]) for r in rs])
                 idx = idx[np.argsort(pre["pos"][idx], kind="stable")]
                 terms.append(termlist_from_slices(pre, idx))
             if terms is None or not terms:
@@ -2410,12 +2509,15 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                     heapq.heapreplace(heap, sc)
         return pd.DataFrame({"doc_id": out_docs, "score": out_scores})
 
-    nb = max(spark.sparkContext.defaultParallelism * 4, 8)
-    scored = (
-        posts.withColumn("_g", F.pmod(F.col("doc_id"), F.lit(nb)))
-        .groupBy("_g")
-        .applyInPandas(score_batch, schema="doc_id long, score double")
-    )
+    schema = "doc_id long, score double"
+    if ptf is not None:
+        reg = ptf.withColumn(
+            "salt", F.pmod(F.col("doc_id"), F.lit(n_salts)).cast("int"))
+        scored = (seg.groupBy("salt").cogroup(reg.groupBy("salt"))
+                  .applyInPandas(score_group, schema=schema))
+    else:
+        scored = seg.groupBy("salt").applyInPandas(
+            lambda pdf: score_group(pdf), schema=schema)
     out = scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return out.limit(k) if k is not None else out
 

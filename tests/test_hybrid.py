@@ -89,7 +89,8 @@ def test_hybrid_search_end_to_end(spark, small_conf, tmp_index):
                       ann_impl="ivf", conf=small_conf)
 
 
-def test_hybrid_fuses_indexed_ann_leg(spark, small_conf, tmp_index):
+def test_hybrid_fuses_indexed_ann_leg(spark, small_conf, tmp_index,
+                                      tmp_path):
     """rrf_fuse composes with a persisted ANN probe leg (the
     documented plug-in path for non-brute vector legs)."""
     import datetime as dt
@@ -115,7 +116,7 @@ def test_hybrid_fuses_indexed_ann_leg(spark, small_conf, tmp_index):
     emb = spark.createDataFrame(
         [(d, [float(d % 3), float(d % 5)]) for d in range(1, 9)],
         "vec_id long, embedding array<float>")
-    ann_dir = tmp_index + "_ann"
+    ann_dir = str(tmp_path / "ann")
     cents = build_ivf_index(emb, ann_dir, n_cells=2)
     vec = (ivf_topk_indexed(spark, ann_dir, cents, [1.0, 1.0], k=8)
            .select(F.col("vec_id").alias("doc_id"), "cos"))

@@ -890,3 +890,95 @@ def test_single_term_ctx_only_on_anchor_free_multi_gen(
     got2 = {r["doc_id"] for r in
             ex.search_all(spark, d2, "apple", conf=conf).collect()}
     assert {1, 2, 9} <= got2 and calls == []  # general plan used
+
+
+# ---------------------------------------------------------------------------
+# one-stage exact plan: per-salt decode-and-score over blob rows
+# ---------------------------------------------------------------------------
+
+
+def test_reference_exact_is_one_python_stage(ref_index, spark, small_conf):
+    """A two-term reference top-k runs ONE pandas UDF node, the per-salt
+    FlatMapGroupsInPandas, with no MapInPandas decode stage; no exchange
+    carries decoded positions or ctxs — only blob rows cross it."""
+    import re
+
+    from open_source_search_engine_spark.query.executor import search
+
+    df = search(spark, ref_index, "needle thread", k=10,
+                conf=_ref_conf(small_conf))
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    tree, _, details = plan.partition("\n\n\n")
+    udf_nodes = re.findall(r"\w*(?:InPandas|InArrow|EvalPython)\w*", tree)
+    assert udf_nodes == ["FlatMapGroupsInPandas"]
+    inputs = re.findall(r"\(\d+\) \w*Exchange\s*\nInput \[\d+\]: \[(.*)\]",
+                        details)
+    assert inputs
+    for cols in inputs:
+        names = {c.split("#")[0].strip() for c in cols.split(",")}
+        assert not names & {"positions", "ctxs"}, cols
+
+
+def test_reference_exact_multi_gen_matches_compacted(spark, small_conf,
+                                                     tmp_path):
+    """Newest-wins and negative terms inside the group body: on an index
+    with a tombstone generation and a re-crawl generation, a two-term
+    and an ``a b -c`` reference query return the same doc ids and
+    scores as after ``compact_index``. Every doc holds both query terms,
+    so their df ratio clamps the term-freq weight in both states, and
+    70 docs salt them (exact rows) in the base generation while the
+    small re-crawl keeps them in shared rows."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from open_source_search_engine_spark.index.build import (
+        build_index,
+        compact_index,
+        delete_docs,
+    )
+    from open_source_search_engine_spark.query.executor import search
+
+    def corpus(texts, day):
+        return spark.createDataFrame(pd.DataFrame([{
+            "url": f"http://s{did % 7}.example/p/{did}.html",
+            "warc_ts": dt.datetime(2024, 1, day),
+            "html": f"<html><body><p>{t}</p></body></html>".encode(),
+            "text": t, "lang": "en", "doc_id": did}
+            for did, t in texts.items()]))
+
+    base = {did: ("alpha " + "pad " * (did % 5) + "beta "
+                  + "word " * (did % 3)
+                  + ("gamma" if did % 4 == 0 else "tail"))
+            for did in range(1, 71)}
+    d = str(tmp_path / "mgidx")
+    build_index(spark, corpus(base, 1), d, conf=small_conf, gen=0)
+    delete_docs(spark, d, [2, 5, 9], gen=1)
+    # re-crawl: 4 drops gamma, 3 gains it, 6 changes its proximity,
+    # 5 comes back after its tombstone
+    recrawl = {3: "alpha beta gamma", 4: "alpha beta tail",
+               5: "beta pad alpha", 6: "alpha pad pad pad pad beta"}
+    build_index(spark, corpus(recrawl, 2), d, conf=small_conf, gen=2)
+
+    conf = _ref_conf(small_conf)
+    queries = [("alpha beta", k) for k in (None, 10)] + \
+        [("alpha beta -gamma", k) for k in (None, 10)]
+
+    def run():
+        out = {}
+        for q, k in queries:
+            rows = search(spark, d, q, k=k, conf=conf).collect()
+            out[q, k] = sorted(((r["doc_id"], r["score"]) for r in rows),
+                               key=lambda t: (-t[1], t[0]))
+        return out
+
+    before = run()
+    compact_index(spark, d, conf=small_conf)
+    after = run()
+    assert before == after
+    docs = {did for did, _ in before["alpha beta", None]}
+    assert docs == set(base) - {2, 9}
+    neg = {did for did, _ in before["alpha beta -gamma", None]}
+    assert 4 in neg and 3 not in neg and 8 not in neg
+    assert len(before["alpha beta", 10]) == 10
