@@ -51,12 +51,23 @@ def _index_dir(sf_dir: str, flavor: str) -> str:
     from open_source_search_engine_spark.config import DEFAULT_CONF
 
     wrapper_v = 2
+    sf_path = os.path.abspath(sf_dir)
+    sf_key = hashlib.md5(sf_path.encode()).hexdigest()[:8]
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{flavor}:v{CODEC_VERSION}"
+        f"{sf_path}:{flavor}:v{CODEC_VERSION}"
         f".{INDEX_FORMAT_VERSION}.w{wrapper_v}"
         f".c{DEFAULT_CONF.docid_codec}.s{_build_source_digest()}".encode()
     ).hexdigest()[:12]
-    return os.path.join("/tmp", f"osse_idx_{flavor}_{key}")
+    d = os.path.join("/tmp", f"osse_idx_{flavor}_{sf_key}_{key}")
+    if not os.path.exists(d):
+        # cache miss: drop the sets of this flavor and sf_dir that other
+        # code versions built; sets of other sf_dirs stay
+        import glob
+        import shutil
+
+        for stale in glob.glob(d[:-len(key)] + "*"):
+            shutil.rmtree(stale, ignore_errors=True)
+    return d
 
 
 def _build_source_digest() -> str:
