@@ -61,12 +61,20 @@ def _index_dir(sf_dir: str, flavor: str) -> str:
     d = os.path.join("/tmp", f"osse_idx_{flavor}_{sf_key}_{key}")
     if not os.path.exists(d):
         # cache miss: drop the sets of this flavor and sf_dir that other
-        # code versions built; sets of other sf_dirs stay
+        # code versions built, and the flavor's sets named in the older
+        # osse_idx_<flavor>_<12 hex> form (no sf_dir in the name); sets
+        # of other sf_dirs stay
         import glob
+        import re
         import shutil
 
-        for stale in glob.glob(d[:-len(key)] + "*"):
-            shutil.rmtree(stale, ignore_errors=True)
+        old_form = re.compile(
+            rf"osse_idx_{re.escape(flavor)}_[0-9a-f]{{12}}")
+        stale = glob.glob(d[:-len(key)] + "*") + [
+            p for p in glob.glob(os.path.join("/tmp", f"osse_idx_{flavor}_*"))
+            if old_form.fullmatch(os.path.basename(p))]
+        for p in stale:
+            shutil.rmtree(p, ignore_errors=True)
     return d
 
 

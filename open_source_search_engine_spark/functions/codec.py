@@ -1128,7 +1128,13 @@ def bm25_block_ubs(meta: BlockMeta, idf: float, k1: float, b: float,
     reaches the band threshold — each band's entry dominates every doc
     in that band (its tf <= cap, its dl >= the band min), and every
     doc falls in some band, so the max is a sound per-doc bound that
-    tracks (tf, dl) pairs real docs achieve."""
+    tracks (tf, dl) pairs real docs achieve.
+
+    A non-positive idf (a multi-generation df, summed over generations,
+    can exceed the live doc count) makes every posting score <= 0, so
+    the bound is 0."""
+    if idf <= 0:
+        return np.zeros(meta.nblocks, dtype=np.float64)
 
     def kern(tf, dl):
         return (idf * (tf * (k1 + 1.0))

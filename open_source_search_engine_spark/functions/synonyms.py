@@ -116,12 +116,15 @@ def load_default_synsets(*, replace: bool = False) -> int:
     reference's synset-line format. Explicit OPT-IN — query expansion
     stays governed by ``synonyms=True`` and the table a deployment
     loads; the built-in golden minimum remains the default so existing
-    result contracts don't shift underfoot. Returns words mapped."""
-    import os
+    result contracts don't shift underfoot. Read as a package resource,
+    so it loads from a ``--py-files`` zip too. Returns words mapped."""
+    from importlib.resources import files
 
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)),
-                        "data", "synsets_en.txt")
-    return load_synset_file(path, replace=replace)
+    text = (files("open_source_search_engine_spark").joinpath("data")
+            .joinpath("synsets_en.txt").read_text(encoding="utf-8"))
+    mapping = parse_synset_lines(text.splitlines())
+    load_synonyms(mapping, replace=replace)
+    return len(mapping)
 
 
 # ---------------------------------------------------------------------------

@@ -42,7 +42,6 @@ _DECODED_SCHEMA = T.StructType(
         T.StructField("tf", T.IntegerType()),
         T.StructField("dl", T.IntegerType()),
         T.StructField("rank", T.IntegerType()),
-        T.StructField("gen", T.IntegerType()),
     ]
 )
 
@@ -84,7 +83,6 @@ class IndexReader:
             if not self.gens:
                 raise ValueError(
                     f"no generation <= {as_of_gen} in {self.meta.get('gens')}")
-        self._tombstones = None
         self._n_docs = None
         self._avgdl = None
         self._hf_ids = None
@@ -96,7 +94,8 @@ class IndexReader:
         self._df_cache: dict[int, int] = {}
         self._seg_scan_cache: dict[tuple, DataFrame] = {}
         self._sketch_cache: dict[int, dict[int, int]] = {}
-        self._event_arrays = None
+        self._doc_events = None
+        self._live_events = None
 
     def _gen_dirs(self, table: str) -> list[str]:
         base = getattr(self.paths, table)
@@ -114,19 +113,6 @@ class IndexReader:
         )
 
     @property
-    def tombstones(self) -> DataFrame | None:
-        """doc_id -> newest tombstone gen (negative-key analog)."""
-        if self._tombstones is None:
-            df = self._read_gens("tombstones")
-            if df is None:
-                self._tombstones = False
-            else:
-                self._tombstones = (
-                    df.groupBy("doc_id").agg(F.max("gen").alias("tomb_gen"))
-                )
-        return None if self._tombstones is False else self._tombstones
-
-    @property
     def n_docs(self) -> int:
         if self._n_docs is None:
             self._n_docs = self.docs().count()
@@ -140,22 +126,17 @@ class IndexReader:
         return self._avgdl
 
     def docs(self) -> DataFrame:
-        """Current-snapshot docs view: newest gen wins per docId,
-        tombstoned docs dropped (Msg5 merged-view analog, Msg5.h:1-2)."""
+        """Current-snapshot docs view: a doc's row survives iff the doc
+        has no later index event or its newest event is a re-index at
+        the row's gen, so tombstoned docs drop (Msg5 merged-view analog,
+        Msg5.h:1-2; the ``codec.live_mask`` rule as a broadcast join)."""
         df = self._read_gens("docs")
-        if len(self.gens) > 1:
-            from pyspark.sql import Window
-            w = Window.partitionBy("doc_id").orderBy(F.desc("gen"))
-            df = (df.withColumn("_rn", F.row_number().over(w))
-                  .where(F.col("_rn") == 1).drop("_rn"))
-        tombs = self.tombstones
-        if tombs is not None:
-            df = (
-                df.join(F.broadcast(tombs), "doc_id", "left")
-                .where(F.col("tomb_gen").isNull()
-                       | (F.col("tomb_gen") < F.col("gen")))
-                .drop("tomb_gen")
-            )
+        ev = self.doc_events()
+        if ev is not None:
+            df = (df.join(F.broadcast(ev), "doc_id", "left")
+                  .where(F.col("keep_gen").isNull()
+                         | (F.col("gen") == F.col("keep_gen")))
+                  .drop("keep_gen"))
         return df.drop("gen")
 
     def term_stats(self) -> DataFrame:
@@ -295,10 +276,8 @@ class IndexReader:
         if hf:
             from ..index.shortcuts import SUBDIR as HF_SUBDIR
 
-            # gen = -1 sentinel: shortcut lists are built from the
-            # ALREADY gen-resolved postings view, so _newest_wins must
-            # pass them through untouched (a doc whose newest event is
-            # an earlier delta generation would otherwise be dropped)
+            # gen = -1: shortcut lists are built from the ALREADY
+            # gen-resolved postings view (see codec.live_mask)
             hf_key = ("__hf__",)
             hf_scan = self._seg_scan_cache.get(hf_key)
             if hf_scan is None:
@@ -319,18 +298,17 @@ class IndexReader:
     def postings(self, term_ids: list[int], with_positions: bool = False,
                  candidate_docs: np.ndarray | None = None,
                  ctx_only: bool = False) -> DataFrame:
-        """Decode posting blobs to rows. candidate_docs (sorted uint64)
-        enables doc-skip pruning inside the decode UDF. ctx_only=True
-        returns per-posting ctx arrays WITHOUT decoding the position
-        stream (the heaviest varint span) — enough for any scoring
-        that reads only context weights (single-term reference
+        """Decode posting blobs to rows, newest-wins resolved
+        (``codec.live_mask`` at each blob's generation). candidate_docs
+        (sorted uint64) enables doc-skip pruning inside the decode UDF.
+        ctx_only=True returns per-posting ctx arrays WITHOUT decoding
+        the position stream (the heaviest varint span) — enough for any
+        scoring that reads only context weights (single-term reference
         scorer); the positions column is omitted from the schema."""
         seg = self.segments_for(term_ids)
         # column-prune before the Arrow transfer: decode needs only the
         # key + blob (+ gen partition col); stats columns stay JVM-side
-        keep_cols = [c for c in ("term_id", "postings", "gen")
-                     if c in seg.columns]
-        seg = seg.select(*keep_cols)
+        seg = seg.select("term_id", "postings", "gen")
         # decode-parallelism: bucket dirs of hot terms hold few large
         # files, so the scan yields fewer splits than cores and the
         # python decode serializes on them (measured 8 tasks / 17s wall
@@ -349,6 +327,7 @@ class IndexReader:
             if candidate_docs is not None
             else None
         )
+        bc_ev = self.live_events()
         if ctx_only:
             schema = _DECODED_CTX_SCHEMA
         elif with_positions:
@@ -357,14 +336,13 @@ class IndexReader:
             schema = _DECODED_SCHEMA
 
         def decode(iterator):
-            from ..functions.codec import BlockMeta, blocks_for_candidates
+            from ..functions.codec import BlockMeta, blocks_for_candidates, \
+                live_mask
 
             for pdf in iterator:
                 out = []
-                gens_col = (pdf["gen"] if "gen" in pdf.columns
-                            else pd.Series(0, index=pdf.index))
                 for term_id, blob, g in zip(pdf["term_id"], pdf["postings"],
-                                            gens_col):
+                                            pdf["gen"]):
                     b = bytes(blob)
                     if bc is not None:
                         # skip-pointer seek: decode only blocks whose
@@ -387,8 +365,11 @@ class IndexReader:
                     mask = None
                     if bc is not None:
                         mask = np.isin(docs, bc.value, assume_unique=False)
-                        if not mask.any():
-                            continue
+                    if bc_ev is not None:
+                        live = live_mask(docs, int(g), *bc_ev.value)
+                        mask = live if mask is None else mask & live
+                    if mask is not None and not mask.any():
+                        continue
                     rec = {
                         "term_id": np.full(len(docs), term_id, dtype=np.int64),
                         "doc_id": docs.astype(np.int64),
@@ -397,7 +378,6 @@ class IndexReader:
                         "rank": d["ranks"].astype(np.int32)
                         if "ranks" in d
                         else np.zeros(len(docs), dtype=np.int32),
-                        "gen": np.full(len(docs), int(g), dtype=np.int32),
                     }
                     frame = pd.DataFrame(rec)
                     if with_positions or ctx_only:
@@ -422,56 +402,39 @@ class IndexReader:
                     yield pd.concat(out, ignore_index=True)[
                         [f.name for f in schema.fields]]
 
-        decoded = seg.mapInPandas(decode, schema=schema)
-        return self._newest_wins(decoded)
+        return seg.mapInPandas(decode, schema=schema)
 
     def doc_events(self) -> DataFrame | None:
         """Per-doc latest index event for every doc touched AFTER the base
         generation: (doc_id, keep_gen) where keep_gen is the doc's newest
         (re)index generation, or -1 if its newest event is a tombstone.
+        Planned once per reader.
 
         See build.compute_doc_events (RdbIndex doc-presence resolution,
         RdbIndex.h:20-40): a newer version of a doc shadows ALL its older
         postings. Only delta docs appear, so the frame stays
         broadcast-sized even when the base index holds 10^12 docs."""
-        from ..index.build import compute_doc_events
+        if self._doc_events is None:
+            from ..index.build import compute_doc_events
 
-        return compute_doc_events(self.spark, self.paths, self.gens)
+            ev = compute_doc_events(self.spark, self.paths, self.gens)
+            self._doc_events = False if ev is None else ev
+        return None if self._doc_events is False else self._doc_events
 
-    def doc_event_arrays(self) -> tuple[np.ndarray, np.ndarray] | None:
-        """``doc_events`` as a sorted (doc_id uint64, keep_gen int64)
-        numpy pair for in-UDF newest-wins masking
-        (``codec.live_mask``), collected once per reader — the same
-        delta-sized form ``build.compact_index`` hands the merge
-        kernel. None when the snapshot has no events."""
-        if self._event_arrays is None:
+    def live_events(self):
+        """``doc_events`` as a broadcast sorted (doc_id uint64, keep_gen
+        int64) numpy pair: the ``codec.live_mask`` input of every decode
+        body, collected and broadcast once per reader — the same
+        delta-sized form ``build.compact_index`` hands the merge kernel.
+        None when the snapshot has no events (nothing to mask)."""
+        if self._live_events is None:
             from ..index.build import doc_event_arrays
 
             ev = self.doc_events()
-            self._event_arrays = (False if ev is None
-                                  else doc_event_arrays(ev))
-        return self._event_arrays or None
-
-    def _newest_wins(self, decoded: DataFrame) -> DataFrame:
-        """Drop shadowed/deleted postings: a posting of doc d at gen g
-        survives iff d has no later index event, or its latest event is a
-        re-index at exactly gen g (negative-key annihilation semantics,
-        RdbList.cpp:1945-2043). Implemented as one broadcast left join —
-        no window, no extra shuffle."""
-        ev = self.doc_events()
-        if ev is None:
-            return decoded.drop("gen")
-        return (
-            decoded.join(F.broadcast(ev), "doc_id", "left")
-            .where(F.col("keep_gen").isNull()
-                   | (F.col("gen") == F.col("keep_gen"))
-                   # gen -1 = pre-resolved rows (HF shortcut lists);
-                   # shortcut tables are invalidated on any gen change
-                   # (build._invalidate_derived), and a tombstoned doc
-                   # (keep_gen -1) is dropped here regardless (ADVICE r2)
-                   | ((F.col("gen") == -1) & (F.col("keep_gen") != -1)))
-            .drop("keep_gen", "gen")
-        )
+            self._live_events = (
+                False if ev is None
+                else self.spark.sparkContext.broadcast(doc_event_arrays(ev)))
+        return None if self._live_events is False else self._live_events
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
@@ -846,13 +809,10 @@ def _search_default(spark, rd: IndexReader, cq: CompiledQuery, k: int,
     tids = sorted(tid_gid) if has_syn else [g.term_ids[0] for g in pos_groups]
     dfs = rd.df_of(tids)
 
-    # block-max WAND fast path: single-term top-k on a compacted index
-    # (PosdbTable.cpp:4494 getMaxPossibleScore analog). Other shapes use
-    # the general pipeline; multi-gen/tombstoned indexes fall back since
-    # pruning before newest-wins resolution would be unsound.
+    # block-max WAND fast path: single-term top-k (PosdbTable.cpp:4494
+    # getMaxPossibleScore analog). Other shapes use the general pipeline.
     if (k is not None and len(pos_groups) == 1 and not neg_groups
-            and not need_positions and not has_syn and len(rd.gens) == 1
-            and rd.tombstones is None):
+            and not need_positions and not has_syn):
         return _search_single_wand(spark, rd, tids[0], dfs[tids[0]], k, conf)
 
     # rarest-first candidate pruning (PosdbTable.cpp:5374): prefetching
@@ -875,10 +835,9 @@ def _search_default(spark, rd: IndexReader, cq: CompiledQuery, k: int,
     # full-decode); extreme-df-ratio queries take the rarest-first
     # candidate path above, and all-cold queries (tiny lists) the plain
     # decode below. Gated to shapes where pruning is sound: plain AND,
-    # single-gen index, no negatives/synonyms.
+    # no negatives/synonyms.
     wand_ok = (k is not None and not selective and len(set(tids)) > 1
                and not neg_groups and not has_syn
-               and len(rd.gens) == 1 and rd.tombstones is None
                and all(dfs[t] > 0 for t in tids)
                and _wand_salts_ok(rd, tids, dfs))
 
@@ -1043,7 +1002,8 @@ def _all_hot_salts(rd: IndexReader, tids: list[int]) -> bool:
 def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
                     b: float, avgdl: float, k: int, n_salts: int = 16,
                     stats: bool = False,
-                    runs: list[list[tuple[int, int]]] | None = None):
+                    runs: list[list[tuple[int, int]]] | None = None,
+                    events=None):
     """applyInPandas body for one salt group of a multi-term AND query:
     document-at-a-time block-max WAND over the group's term blobs
     (PosdbTable.cpp:4494 getMaxPossibleScore + :4052-4108 skip-to-next-
@@ -1062,11 +1022,15 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
     decode positions too and each candidate doc must contain an
     occurrence chain at the exact query deltas BEFORE it scores or
     enters the heap (PosdbTable.cpp:832-870) — the degenerate-phrase
-    fast path: adjacency runs at block decode, no posting-row shuffle."""
+    fast path: adjacency runs at block decode, no posting-row shuffle.
+
+    ``events`` (``IndexReader.live_events``) masks every decoded block
+    to its live docs (``codec.live_mask``); masking only removes docs,
+    so each block bound stays an upper bound."""
     import heapq
 
     from ..functions.codec import BlockMeta, blocks_for_candidates, \
-        decode_blocks
+        decode_blocks, live_mask
 
     tidset = set(int(t) for t in tids)
     runs = runs or []
@@ -1097,10 +1061,12 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
         has_shared = ("shared" in pdf.columns)
         sh_col = (pdf["shared"] if has_shared
                   else pd.Series(False, index=pdf.index))
-        for tid, blob, sh in zip(pdf["term_id"], pdf["postings"], sh_col):
+        for tid, blob, sh, g in zip(pdf["term_id"], pdf["postings"], sh_col,
+                                    pdf["gen"]):
             t = int(tid)
             bb = bytes(blob)
-            subs.setdefault(t, []).append((bb, BlockMeta(bb), bool(sh)))
+            subs.setdefault(t, []).append(
+                (bb, BlockMeta(bb), bool(sh), int(g)))
         salt_val = int(pdf["salt"].iloc[0]) if len(pdf) else -1
         cols = (["doc_id", "score"] if not stats
                 else ["doc_id", "score", "salt", "blocks_total",
@@ -1114,15 +1080,15 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
             # to this group
             return sum((max(1, m.n_docs // max(n_salts, 1)) if sh
                         else m.n_docs)
-                       for _, m, sh in subs[t])
+                       for _, m, sh, _ in subs[t])
 
         order_t = sorted(tidset, key=est_docs)
         pivot = order_t[0]
         others = order_t[1:]
-        ubs = {t: [block_ubs(t, m) for _, m, _ in subs[t]]
+        ubs = {t: [block_ubs(t, m) for _, m, _, _ in subs[t]]
                for t in order_t}
         blocks_total = sum(m.nblocks for t in order_t
-                           for _, m, _ in subs[t])
+                           for _, m, _, _ in subs[t])
         # memo: (term, sublist, block) -> decoded arrays; only blocks
         # that survive pruning enter, boundary blocks decode once
         memo: dict[tuple[int, int, int], dict] = {}
@@ -1131,11 +1097,18 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
             key = (t, int(si), int(bi))
             d = memo.get(key)
             if d is None:
-                blob, meta, _ = subs[t][si]
+                blob, meta, _, g = subs[t][si]
                 d = decode_blocks(blob, [int(bi)], with_pos, meta)
                 if with_pos:
                     tf64 = d["tfs"].astype(np.int64)
                     d["pstart"] = np.concatenate(([0], np.cumsum(tf64[:-1])))
+                if events is not None:
+                    # per-doc arrays only: pstart keeps indexing the
+                    # block's full position stream
+                    live = live_mask(d["doc_ids"], g, *events.value)
+                    d.update({c: d[c][live] for c in
+                              ("doc_ids", "tfs", "doclens", "pstart")
+                              if c in d})
                 memo[key] = d
             return d
 
@@ -1152,7 +1125,7 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
         heap: list[float] = []
         out_docs: list[np.ndarray] = []
         out_scores: list[np.ndarray] = []
-        for psi, (pblob, pm, pshared) in enumerate(subs[pivot]):
+        for psi, (_, pm, pshared, _) in enumerate(subs[pivot]):
             base = pm.block_base.astype(np.uint64)
             for bi in range(pm.nblocks):
                 lo = base[bi]
@@ -1164,7 +1137,7 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
                 dead = False
                 for t in others:
                     best = None
-                    for si, (_, m, _) in enumerate(subs[t]):
+                    for si, (_, m, _, _) in enumerate(subs[t]):
                         tb = m.block_base.astype(np.uint64)
                         s = max(int(np.searchsorted(tb, lo,
                                                     side="right")) - 1, 0)
@@ -1207,7 +1180,7 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
                     l_si = np.zeros(len(docs), dtype=np.int64)
                     l_bi = np.zeros(len(docs), dtype=np.int64)
                     l_ri = np.zeros(len(docs), dtype=np.int64)
-                    for si, (_, m, _) in enumerate(subs[t]):
+                    for si, (_, m, _, _) in enumerate(subs[t]):
                         bsel = blocks_for_candidates(m, cand)
                         if len(bsel) == 0:
                             continue
@@ -1216,6 +1189,8 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
                         tdocs = np.concatenate(
                             [p["doc_ids"] for p in parts]) \
                             .astype(np.uint64)
+                        if not len(tdocs):
+                            continue  # every doc masked dead
                         ttf = np.concatenate([p["tfs"] for p in parts])
                         tdl = np.concatenate(
                             [p["doclens"] for p in parts])
@@ -1300,18 +1275,17 @@ def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
     return wand_group
 
 
-def _wand_seg_frame(rd: IndexReader, tids: list[int], n_salts: int,
-                    with_gen: bool = False) -> DataFrame:
+def _wand_seg_frame(rd: IndexReader, tids: list[int],
+                    n_salts: int) -> DataFrame:
     """Segment rows prepared for per-salt grouping: exact rows
     (salt >= 0) keep their group; shared rows (SALT_SHARED cold runs)
     fan out to EVERY group with a `shared` flag so the group body can
     residue-mask them — correct for any hot/cold salt layout. An index
     whose meta declares no doc-keyed salt layout (pre-v9) has every row
-    treated as shared. ``with_gen`` keeps each row's generation."""
+    treated as shared. Each row keeps its generation (``gen``)."""
     c = rd.meta.get("conf", {})
     keyed = c.get("salt_scheme") is not None or c.get("salt_all", False)
-    seg = rd.segments_for(tids).select(
-        "term_id", "salt", "postings", *(["gen"] if with_gen else []))
+    seg = rd.segments_for(tids).select("term_id", "salt", "postings", "gen")
     return (
         seg.withColumn("shared",
                        F.col("salt") < 0 if keyed else F.lit(True))
@@ -1341,7 +1315,8 @@ def _search_multi_wand(spark, rd: IndexReader, tids: list[int],
     n_salts = rd.meta.get("conf", {}).get("n_salts", rd.conf.n_salts)
     seg = _wand_seg_frame(rd, tids, n_salts)
     fn = make_wand_group(tids, idf_map, conf.k1, conf.b, rd.avgdl, k,
-                         n_salts=n_salts, runs=runs)
+                         n_salts=n_salts, runs=runs,
+                         events=rd.live_events())
     rows = seg.groupBy("salt").applyInPandas(
         fn, schema="doc_id long, score double")
     return rows.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
@@ -1365,7 +1340,8 @@ def multi_wand_stats(spark, index_dir: str, query: str, k: int = 10,
         for run in cq.quoted_runs
     ] or None
     fn = make_wand_group(tids, idf_map, conf.k1, conf.b, rd.avgdl, k,
-                         n_salts=n_salts, stats=True, runs=wand_runs)
+                         n_salts=n_salts, stats=True, runs=wand_runs,
+                         events=rd.live_events())
     rows = seg.groupBy("salt").applyInPandas(
         fn, schema=("doc_id long, score double, salt int,"
                     " blocks_total long, blocks_decoded long"))
@@ -1425,24 +1401,27 @@ def _search_single_wand(spark, rd: IndexReader, tid: int, df_t: int,
     visited in descending upper-bound order (bound from bmax_tf/bmin_dl,
     monotone-valid for every doc in the block) and decoding stops at the
     first block whose bound can't beat the running k-th best score —
-    skipped blocks are never stream-decoded (skip pointers). The emitted
-    rows are a superset of the true top-k; the global
-    TakeOrderedAndProject finishes the job."""
+    skipped blocks are never stream-decoded (skip pointers). Each
+    decoded block is masked to its live docs (``codec.live_mask`` at
+    the blob's generation) before it scores. The emitted rows are a
+    superset of the true top-k; the global TakeOrderedAndProject
+    finishes the job."""
     if df_t == 0:
         return spark.createDataFrame([], "doc_id long, score double")
     idf = bm25_idf(rd.n_docs, df_t)
     k1, b, avgdl = conf.k1, conf.b, rd.avgdl
-    seg = rd.segments_for([tid]).select("postings")
+    seg = rd.segments_for([tid]).select("postings", "gen")
+    bc_ev = rd.live_events()
 
     def decode_topk(iterator):
         import heapq
 
-        from ..functions.codec import BlockMeta, decode_blocks
+        from ..functions.codec import BlockMeta, decode_blocks, live_mask
 
         heap: list[float] = []
         for pdf in iterator:
             frames = []
-            for blob in pdf["postings"]:
+            for blob, g in zip(pdf["postings"], pdf["gen"]):
                 meta = BlockMeta(bytes(blob))
                 if meta.nblocks == 0:
                     continue
@@ -1455,13 +1434,16 @@ def _search_single_wand(spark, rd: IndexReader, tid: int, df_t: int,
                     if ub[bi] < thr:
                         break  # no later block can beat the top-k
                     d = decode_blocks(bytes(blob), [int(bi)], False, meta)
+                    docs = d["doc_ids"]
                     tf = d["tfs"].astype(np.float64)
                     dl = d["doclens"].astype(np.float64)
+                    if bc_ev is not None:
+                        live = live_mask(docs, int(g), *bc_ev.value)
+                        docs, tf, dl = docs[live], tf[live], dl[live]
                     s = (idf * (tf * (k1 + 1.0))
                          / (tf + k1 * (1.0 - b + b * dl / avgdl)))
                     frames.append(pd.DataFrame(
-                        {"doc_id": d["doc_ids"].astype(np.int64),
-                         "score": s}))
+                        {"doc_id": docs.astype(np.int64), "score": s}))
                     for v in s:
                         if len(heap) < k:
                             heapq.heappush(heap, float(v))
@@ -1488,20 +1470,16 @@ def _numeric_values(rd: IndexReader, tid: int,
     per-doc filter still runs afterwards; pruning only removes whole
     blocks that cannot contain a match. stats=True adds
     (blocks_total, blocks_decoded) counters to every row."""
-    seg = rd.segments_for([int(tid)])
-    keep_cols = [c for c in ("term_id", "postings", "gen")
-                 if c in seg.columns]
-    seg = seg.select(*keep_cols)
+    seg = rd.segments_for([int(tid)]).select("postings", "gen")
     lo_f = None if lo is None else float(lo)
     hi_f = None if hi is None else float(hi)
+    bc_ev = rd.live_events()
 
     def decode_vals(iterator):
-        from ..functions.codec import BlockMeta, decode_blocks
+        from ..functions.codec import BlockMeta, decode_blocks, live_mask
 
         for pdf in iterator:
-            gens_col = (pdf["gen"] if "gen" in pdf.columns
-                        else pd.Series(0, index=pdf.index))
-            for blob, g in zip(pdf["postings"], gens_col):
+            for blob, g in zip(pdf["postings"], pdf["gen"]):
                 b = bytes(blob)
                 meta = BlockMeta(b)
                 if meta.nblocks == 0:
@@ -1521,7 +1499,7 @@ def _numeric_values(rd: IndexReader, tid: int,
                     # one counter row per blob (not per doc): the sum
                     # over rows is then the true per-blob total
                     yield pd.DataFrame(
-                        {"doc_id": [-1], "value": [0.0], "gen": [int(g)],
+                        {"doc_id": [-1], "value": [0.0],
                          "blocks_total": [btotal],
                          "blocks_decoded": [len(bsel)]})
                     continue
@@ -1530,19 +1508,18 @@ def _numeric_values(rd: IndexReader, tid: int,
                 d = decode_blocks(b, bsel, True, meta)
                 tf64 = d["tfs"].astype(np.int64)
                 starts = np.concatenate(([0], np.cumsum(tf64[:-1])))
+                docs = d["doc_ids"]
                 vals = d["positions"][starts].astype(np.float64)
-                yield pd.DataFrame({
-                    "doc_id": d["doc_ids"].astype(np.int64),
-                    "value": vals,
-                    "gen": np.full(len(vals), int(g), np.int32)})
+                if bc_ev is not None:
+                    live = live_mask(docs, int(g), *bc_ev.value)
+                    docs, vals = docs[live], vals[live]
+                yield pd.DataFrame({"doc_id": docs.astype(np.int64),
+                                    "value": vals})
 
-    schema = ("doc_id long, value double, gen int"
+    schema = ("doc_id long, value double"
               + (", blocks_total long, blocks_decoded long" if stats
                  else ""))
-    decoded = seg.mapInPandas(decode_vals, schema=schema)
-    if stats:
-        return decoded  # raw counter surface; no event resolution
-    return rd._newest_wins(decoded)
+    return seg.mapInPandas(decode_vals, schema=schema)
 
 
 def numeric_block_stats(spark, index_dir: str, field: str,
@@ -1974,30 +1951,27 @@ def _reference_candidates(spark, rd: IndexReader, cq: CompiledQuery,
                 slot_tfw[st] = tfw_of[int(g.term_ids[0])]
     tids = sorted(tid_slot)
 
-    seg = rd.segments_for(tids)
-    keep_cols = [c for c in ("term_id", "postings", "gen")
-                 if c in seg.columns]
-    seg = seg.select(*keep_cols)
+    seg = rd.segments_for(tids).select("term_id", "postings", "gen")
     par = spark.sparkContext.defaultParallelism
     seg = seg.repartition(par)
 
     bc = (spark.sparkContext.broadcast(
               candidate_docs.astype(np.uint64))
           if candidate_docs is not None else None)
+    bc_ev = rd.live_events()
 
     def decode_u(iterator):
         from ..functions.codec import (
             BlockMeta,
             blocks_for_candidates,
             decode_blocks,
+            live_mask,
         )
 
         for pdf in iterator:
             out = []
-            gens_col = (pdf["gen"] if "gen" in pdf.columns
-                        else pd.Series(0, index=pdf.index))
             for term_id, blob, g in zip(pdf["term_id"], pdf["postings"],
-                                        gens_col):
+                                        pdf["gen"]):
                 # ctx-only decode: the bound needs per-posting ctx
                 # weights but no positions — skip the heaviest varint
                 # span in the blob; with a candidate set, skip-pointer
@@ -2015,10 +1989,14 @@ def _reference_candidates(spark, rd: IndexReader, cq: CompiledQuery,
                 docs = d["doc_ids"]
                 if not len(docs):
                     continue
+                cmask = None
                 if bc is not None:
                     cmask = np.isin(docs, bc.value)
-                    if not cmask.any():
-                        continue
+                if bc_ev is not None:
+                    live = live_mask(docs, int(g), *bc_ev.value)
+                    cmask = live if cmask is None else cmask & live
+                if cmask is not None and not cmask.any():
+                    continue
                 tf64 = d["tfs"].astype(np.int64)
                 if len(d["positions"]):
                     pre = precompute_postings(
@@ -2045,9 +2023,8 @@ def _reference_candidates(spark, rd: IndexReader, cq: CompiledQuery,
                     "pf_s": pf_s,
                     "pf_g": pf_g,
                     "pf_l": pf_l,
-                    "gen": np.full(len(docs), int(g), np.int32),
                 })
-                if bc is not None:
+                if cmask is not None:
                     frame = frame[cmask]
                 out.append(frame)
             if out:
@@ -2056,8 +2033,7 @@ def _reference_candidates(spark, rd: IndexReader, cq: CompiledQuery,
     u_rows = seg.mapInPandas(
         decode_u,
         schema=("term_id long, doc_id long, rank int, u double, "
-                "pf_s double, pf_g double, pf_l double, gen int"))
-    u_rows = rd._newest_wins(u_rows)
+                "pf_s double, pf_g double, pf_l double"))
 
     slot_expr = F.create_map(
         *[x for t in tids for x in (F.lit(int(t)),
@@ -2182,7 +2158,7 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
     blob rows (PLANS.md §23): each salt group decodes its blobs
     (block-skipping to ``candidate_docs`` when given), drops postings
     shadowed by a newer generation or a tombstone (``codec.live_mask``
-    over ``IndexReader.doc_event_arrays``) and docs with a live
+    over ``IndexReader.live_events``) and docs with a live
     negative-term posting, then scores from the flat position/ctx
     arrays with the per-doc bound + top-k heap. The exchange carries
     blob rows only; no decoded posting row leaves Python."""
@@ -2243,13 +2219,11 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
     # meets in one group
     neg_tids = {int(g.term_ids[0]) for g in cq.negative_groups}
     n_salts = rd.meta.get("conf", {}).get("n_salts", rd.conf.n_salts)
-    seg = _wand_seg_frame(rd, sorted(set(all_tids) | neg_tids), n_salts,
-                          with_gen=True)
+    seg = _wand_seg_frame(rd, sorted(set(all_tids) | neg_tids), n_salts)
     sc = spark.sparkContext
     bc = (sc.broadcast(candidate_docs.astype(np.uint64))
           if candidate_docs is not None else None)
-    events = rd.doc_event_arrays()
-    bc_ev = sc.broadcast(events) if events is not None else None
+    bc_ev = rd.live_events()
 
     # page-temperature registry (query/pagetemp.py): corpus-sized, so it
     # is co-grouped by the same doc residue, never collected;

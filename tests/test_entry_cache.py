@@ -38,3 +38,27 @@ def test_index_dir_miss_drops_stale_sets_of_same_sf_dir(tmp_path,
     finally:
         for d in made:
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_index_dir_miss_drops_old_form_sets(tmp_path, monkeypatch):
+    """Sets named in the older osse_idx_<flavor>_<12 hex> form (no sf_dir
+    key) are removed on a miss of their flavor; another flavor's stay."""
+    import uuid
+
+    import __spark_entry__ as se
+
+    tag = uuid.uuid4().hex[:8]
+    flavor, other = f"t{tag}a", f"t{tag}b"
+    old_same = os.path.join("/tmp", f"osse_idx_{flavor}_{tag}0123")
+    old_other = os.path.join("/tmp", f"osse_idx_{other}_{tag}0123")
+    made = [old_same, old_other]
+    try:
+        for d in (old_same, old_other):
+            os.makedirs(d)
+        monkeypatch.setattr(se, "_build_source_digest", lambda: "new")
+        made.append(se._index_dir(str(tmp_path / "sf"), flavor))
+        assert not os.path.exists(old_same)
+        assert os.path.isdir(old_other)
+    finally:
+        for d in made:
+            shutil.rmtree(d, ignore_errors=True)

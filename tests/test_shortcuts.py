@@ -86,9 +86,9 @@ def test_shortcut_unregistered_terms_unaffected(hf_index, spark,
 def test_shortcut_multigen_newest_wins_bypass(spark, small_conf,
                                               tmp_path_factory):
     """Shortcut lists are built from the gen-RESOLVED postings view and
-    must bypass _newest_wins (gen=-1 sentinel): a doc whose newest
-    index event is a later delta generation still appears in shortcut
-    results (code-review r2 finding #1)."""
+    pass the newest-wins mask untouched (gen = -1, codec.live_mask): a
+    doc whose newest index event is a later delta generation still
+    appears in shortcut results (code-review r2 finding #1)."""
     import datetime as dt
 
     import pandas as pd

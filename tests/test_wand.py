@@ -22,26 +22,34 @@ from open_source_search_engine_spark.query.executor import (
 N_DOCS = 1300  # > adaptive hot threshold (1000) so query words are salted
 
 
-def _corpus(spark):
+def _webtext(spark, bodies: dict[int, str], day: int = 0):
     rows = []
-    fillers = ["lorem", "ipsum", "dolor", "sit", "amet", "quartz", "zinc"]
-    for d in range(1, N_DOCS + 1):
-        # every doc has alpha+beta+gamma with varying tf so BM25 varies
-        body = ("alpha " * (1 + d % 7) + "beta " * (1 + d % 5)
-                + "gamma " * (1 + d % 3)
-                + " ".join(fillers[: 1 + d % len(fillers)])
-                # cold term (df = 50 < the ~130 salt threshold at this
-                # corpus size): exercises the shared-run WAND sublists
-                + (" coldword" if d % 26 == 0 else ""))
+    for d, body in bodies.items():
         rows.append({
             "url": f"http://h{d % 9}.example/w/{d}.html",
-            "warc_ts": dt.datetime(2024, 1, 1) + dt.timedelta(minutes=d),
+            "warc_ts": (dt.datetime(2024, 1, 1 + day)
+                        + dt.timedelta(minutes=d)),
             "html": f"<html><body><p>{body}</p></body></html>".encode(),
             "text": body,
             "lang": "en",
             "doc_id": d,
         })
     return spark.createDataFrame(pd.DataFrame(rows))
+
+
+def _corpus(spark):
+    bodies = {}
+    fillers = ["lorem", "ipsum", "dolor", "sit", "amet", "quartz", "zinc"]
+    for d in range(1, N_DOCS + 1):
+        # every doc has alpha+beta+gamma with varying tf so BM25 varies
+        bodies[d] = ("alpha " * (1 + d % 7) + "beta " * (1 + d % 5)
+                     + "gamma " * (1 + d % 3)
+                     + " ".join(fillers[: 1 + d % len(fillers)])
+                     # cold term (df = 50 < the ~130 salt threshold at
+                     # this corpus size): exercises the shared-run WAND
+                     # sublists
+                     + (" coldword" if d % 26 == 0 else ""))
+    return _webtext(spark, bodies)
 
 
 @pytest.fixture(scope="module")
@@ -238,6 +246,221 @@ def test_wand_cold_shared_sublists(wand_index, spark, small_conf,
                       conf=small_conf).collect()
     assert len(full) > 0
     _assert_topk_equiv(got, full, 10)
+
+
+# ---------------------------------------------------------------------------
+# live (multi-generation) indexes: both WAND plans mask every decoded
+# block with codec.live_mask, so they keep serving after re-crawls,
+# tombstones and re-adds, and agree with the decode plan and with the
+# compacted index
+# ---------------------------------------------------------------------------
+
+RECRAWLED = [d for d in range(1, N_DOCS + 1) if d % 31 == 0]
+TOMBSTONED = [d for d in range(1, N_DOCS + 1) if d % 37 == 1]
+READDED = [38, 75, 186]  # 186 is re-crawled, tombstoned, then re-added
+
+# (query, plan the live index must take)
+LIVE_QUERIES = [
+    ("quartz", "_search_single_wand"),
+    ("coldword", "_search_single_wand"),
+    ("alpha", "_search_single_wand"),
+    ("alpha quartz", "_search_multi_wand"),
+    ("quartz coldword", "_search_multi_wand"),
+    ("alpha beta gamma", "_search_multi_wand"),
+    ('"alpha beta"', "_search_multi_wand"),
+]
+
+
+def _copy_index(src, tmp_path_factory, name):
+    import shutil
+
+    d = str(tmp_path_factory.mktemp(name) / "index")
+    shutil.copytree(src, d)
+    return d
+
+
+@pytest.fixture(scope="module")
+def live_index(wand_index, spark, small_conf, tmp_path_factory):
+    """The module corpus plus a re-crawl (gen 1), a tombstone batch
+    (gen 2) and a re-add of tombstoned docs (gen 3). 'alpha' is in every
+    doc, so its df summed over generations exceeds the live doc count
+    and its idf is negative."""
+    from open_source_search_engine_spark.index.build import delete_docs
+
+    d = _copy_index(wand_index, tmp_path_factory, "wand_live_idx")
+    recrawl = {x: ("alpha " * (1 + x % 11) + "beta " * (1 + x % 4)
+                   + "gamma " * (2 + x % 5) + "quartz " * (x % 3)
+                   + "coldword " * (x % 2) + "recrawled")
+               for x in RECRAWLED}
+    build_index(spark, _webtext(spark, recrawl, day=1), d, conf=small_conf,
+                gen=1)
+    delete_docs(spark, d, TOMBSTONED, gen=2)
+    readd = {x: ("alpha " * 12 + "beta " * 9 + "gamma " * 6
+                 + "quartz " * 6 + "coldword " * 4 + "readded")
+             for x in READDED}
+    build_index(spark, _webtext(spark, readd, day=2), d, conf=small_conf,
+                gen=3)
+    return d
+
+
+def _tid(word):
+    from open_source_search_engine_spark.functions.gbhash import term_id
+
+    return int(term_id(word))
+
+
+def _spy_plans(monkeypatch):
+    import open_source_search_engine_spark.query.executor as ex
+
+    called = []
+    for name in ("_search_single_wand", "_search_multi_wand"):
+        orig = getattr(ex, name)
+
+        def spy(*a, _name=name, _orig=orig, **kw):
+            called.append(_name)
+            return _orig(*a, **kw)
+
+        monkeypatch.setattr(ex, name, spy)
+    return called
+
+
+def _live_vs_decode_and_compacted(spark, conf, live, compacted, queries,
+                                  monkeypatch):
+    """Every query: the plan named beside it runs on ``live`` and returns
+    the top-k of the decode plan (``search_all``), at k = 5 and 10; the
+    compacted copy, scored with the live snapshot's df, returns the same
+    top-k."""
+    import open_source_search_engine_spark.query.executor as ex
+    from open_source_search_engine_spark.query.compiler import compile_query
+
+    rd = IndexReader(spark, live, conf)
+    assert len(rd.gens) > 1
+    rd_c = IndexReader(spark, compacted, conf)
+    assert len(rd_c.gens) == 1
+    assert rd_c.n_docs == rd.n_docs
+    assert abs(rd_c.avgdl - rd.avgdl) < 1e-9
+    called = _spy_plans(monkeypatch)
+    for q, plan in queries:
+        tids = [g.term_ids[0] for g in compile_query(q).positive_groups]
+        # df summed over generations is an upper bound that compaction
+        # makes exact; pin the live value so both indexes score alike
+        rd_c._df_cache.update(rd.df_of(tids))
+        full = ex.search_all(spark, live, q, conf=conf, reader=rd).collect()
+        assert len(full) >= 10, q
+        for k in (5, 10):
+            called.clear()
+            got = ex.search(spark, live, q, k=k, conf=conf,
+                            reader=rd).collect()
+            assert called == [plan], (q, called)
+            _assert_topk_equiv(got, full, k)
+            got_c = ex.search(spark, compacted, q, k=k, conf=conf,
+                              reader=rd_c).collect()
+            _assert_topk_equiv(got_c, full, k)
+
+
+def test_wand_on_live_index_matches_decode_and_compacted(
+        live_index, spark, small_conf, tmp_path_factory, monkeypatch):
+    from open_source_search_engine_spark.index.build import compact_index
+
+    compacted = _copy_index(live_index, tmp_path_factory, "wand_live_cmp")
+    compact_index(spark, compacted, conf=small_conf)
+    rd = IndexReader(spark, live_index, small_conf)
+    # the states the masks must resolve: re-crawled, tombstoned,
+    # re-added (and re-crawled + tombstoned + re-added)
+    live = {r["doc_id"] for r in rd.docs().select("doc_id").collect()}
+    assert live == (set(range(1, N_DOCS + 1)) - set(TOMBSTONED)
+                    | set(READDED))
+    assert rd.df_of([_tid("alpha")])[_tid("alpha")] > rd.n_docs
+    _live_vs_decode_and_compacted(spark, small_conf, live_index, compacted,
+                                  LIVE_QUERIES, monkeypatch)
+
+
+def test_live_reader_plans_doc_events_once(live_index, spark, small_conf,
+                                           monkeypatch):
+    """On a 3-generation reader (re-crawl + tombstones) the doc-event map
+    is planned once per reader, and decoded postings carry the
+    newest-wins mask inside the decode: their plan has no join."""
+    import open_source_search_engine_spark.index.build as build
+    import open_source_search_engine_spark.query.executor as ex
+
+    calls = []
+    orig = build.compute_doc_events
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(build, "compute_doc_events", spy)
+    rd = IndexReader(spark, live_index, small_conf, as_of_gen=2)
+    assert rd.gens == [0, 1, 2]
+    for q in ("quartz", "alpha quartz", "quartz -coldword", '"alpha beta"',
+              "quartz coldword"):
+        ex.search(spark, live_index, q, k=5, conf=small_conf,
+                  reader=rd).collect()
+    posts = rd.postings([_tid("quartz")], with_positions=True)
+    assert posts.count() > 0
+    rd.postings([_tid("coldword")]).count()
+    assert len(calls) == 1
+    plan = posts._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan
+
+
+def _anchor_webtext(spark, anchor_word: str, linkers, day: int = 0):
+    """Targets 1..150 (sites t0-t4) and linkers 151..200 (sites l0-l4):
+    each linker links two targets with ``anchor_word`` anchor text."""
+    rows = []
+
+    def target_url(t):
+        return f"http://t{t % 5}.example/p/{t}.html"
+
+    for d in list(range(1, 151)) + list(range(151, 201)):
+        if d <= 150:
+            if day:
+                continue  # a re-crawl batch carries linkers only
+            body = ("alpha " * (1 + d % 6) + "beta " * (1 + d % 4)
+                    + ("kiwi " * (1 + d % 3) if d % 2 else "") + "target")
+            links = ""
+            url = target_url(d)
+        else:
+            if d not in linkers:
+                continue
+            body = "alpha " * (1 + d % 3) + "linker page"
+            links = "".join(
+                f'<a href="{target_url(t)}">{anchor_word} kiwi</a> '
+                for t in ((d * 7) % 150 + 1, (d * 13) % 150 + 1))
+            url = f"http://l{d % 5}.example/p/{d}.html"
+        html = f"<html><body><p>{body}</p>{links}</body></html>".encode()
+        rows.append({"url": url,
+                     "warc_ts": (dt.datetime(2024, 1, 1 + day)
+                                 + dt.timedelta(minutes=d)),
+                     "html": html, "text": None, "lang": "en",
+                     "doc_id": d})
+    return spark.createDataFrame(pd.DataFrame(rows))
+
+
+def test_wand_on_live_anchor_index(spark, small_conf, tmp_path_factory,
+                                   monkeypatch):
+    """Anchor-carrying index (meta has_anchors): linkers re-crawled in
+    gen 1 with new anchor text while their targets' body rows stay in
+    gen 0. WAND, decode and the compacted index agree."""
+    from open_source_search_engine_spark.index.build import compact_index
+
+    idx = str(tmp_path_factory.mktemp("wand_anchor_idx"))
+    build_index(spark, _anchor_webtext(spark, "zebra", range(151, 201)),
+                idx, conf=small_conf, gen=0)
+    build_index(spark, _anchor_webtext(spark, "omega", range(151, 176),
+                                       day=1),
+                idx, conf=small_conf, gen=1)
+    rd = IndexReader(spark, idx, small_conf)
+    assert rd.meta["has_anchors"] and rd.gens == [0, 1]
+    compacted = _copy_index(idx, tmp_path_factory, "wand_anchor_cmp")
+    compact_index(spark, compacted, conf=small_conf)
+    _live_vs_decode_and_compacted(
+        spark, small_conf, idx, compacted,
+        [("kiwi", "_search_single_wand"),
+         ("alpha kiwi", "_search_multi_wand"),
+         ("alpha zebra", "_search_multi_wand")],
+        monkeypatch)
 
 
 # ---------------------------------------------------------------------------

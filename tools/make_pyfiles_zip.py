@@ -1,4 +1,5 @@
-"""Package open_source_search_engine_spark into a --py-files zip.
+"""Package open_source_search_engine_spark into a --py-files zip: its
+``.py`` files and the data assets under ``data/``.
 
 Usage: python tools/make_pyfiles_zip.py [out.zip]   (default /tmp/osse_pkg.zip)
 """
@@ -17,8 +18,9 @@ def make_zip(out_path: str) -> str:
         for root, _dirs, files in os.walk(pkg):
             if "__pycache__" in root:
                 continue
+            in_data = os.path.relpath(root, pkg).split(os.sep)[0] == "data"
             for f in sorted(files):
-                if not f.endswith(".py"):
+                if not (f.endswith(".py") or in_data):
                     continue
                 full = os.path.join(root, f)
                 z.write(full, os.path.relpath(full, repo))
