@@ -31,10 +31,6 @@ class EngineConf:
     # numbers). Readers handle all versions transparently, including
     # mixed-version indexes across generations.
     docid_codec: str = "pfor"
-    # reference-scorer two-pass candidate plan kicks in when the summed
-    # query-term df reaches this (below it the extra fixed-cost Spark
-    # job outweighs the decode saved); tests lower it to force the path
-    ref_two_pass_min_postings: int = 100_000
     # sketch-informed planner gate: when the index has per-term docid
     # HLL sketches (term_sketch_p), a conjunctive top-k that the
     # df-ratio heuristics routed to WAND consults the estimated

@@ -903,11 +903,11 @@ def decode_blocks(blob: bytes, block_idx=None, with_positions: bool = False,
                   ctx_only: bool = False) -> dict:
     """Decode the selected blocks (all when block_idx is None) into flat
     arrays. Skipped blocks cost zero stream decoding (skip pointers).
-    ctx_only=True (with with_positions) reads the fixed-width ctx bytes
-    but SKIPS the position varint decode, returning zeros for positions
-    — the reference-scorer candidate pass needs per-posting ctx weights
-    but no positions, and the position stream is the most expensive
-    varint span in the blob."""
+    ctx_only=True (with with_positions) reads the ctx stream but SKIPS
+    the position decode, returning zeros for positions — the reference
+    scorer's per-doc bounds need per-posting ctx weights but no
+    positions, and the position stream is the most expensive span in
+    the blob."""
     m = meta or BlockMeta(blob)
     buf = m.buf
     if m.n_docs == 0:
@@ -1052,20 +1052,24 @@ def decode_blocks(blob: bytes, block_idx=None, with_positions: bool = False,
         out_rks.append(rk)
         if with_positions:
             npos = int(m.npos[bi])
-            if m.version >= PFOR_ALL_VERSION:
-                pd = (_for_unpack(buf, pos_base + int(pos_off[bi]), npos)
-                      if npos else np.empty(0, dtype=np.uint64))
+            if ctx_only:
+                out_pos.append(np.zeros(npos, dtype=np.uint64))
             else:
-                pd, _ = _varint_decode(buf, npos,
-                                       pos_base + int(pos_off[bi]),
-                                       pos_base + int(pos_off[bi + 1]))
-            # reconstruct absolute positions: cumsum reset at doc starts
-            starts = np.zeros(cnt, dtype=np.int64)
-            starts[1:] = np.cumsum(tf[:-1]).astype(np.int64)
-            csum = np.cumsum(pd, dtype=np.uint64)
-            base = np.repeat(np.arange(cnt), tf.astype(np.int64))
-            start_csum = csum[starts[base]] - pd[starts[base]]
-            out_pos.append(csum - start_csum)
+                if m.version >= PFOR_ALL_VERSION:
+                    pd = (_for_unpack(buf, pos_base + int(pos_off[bi]),
+                                      npos)
+                          if npos else np.empty(0, dtype=np.uint64))
+                else:
+                    pd, _ = _varint_decode(buf, npos,
+                                           pos_base + int(pos_off[bi]),
+                                           pos_base + int(pos_off[bi + 1]))
+                # absolute positions: cumsum reset at doc starts
+                starts = np.zeros(cnt, dtype=np.int64)
+                starts[1:] = np.cumsum(tf[:-1]).astype(np.int64)
+                csum = np.cumsum(pd, dtype=np.uint64)
+                base = np.repeat(np.arange(cnt), tf.astype(np.int64))
+                start_csum = csum[starts[base]] - pd[starts[base]]
+                out_pos.append(csum - start_csum)
             if m.version >= PFOR_ALL_VERSION:
                 out_ctx.append(
                     _for_unpack(buf, ctx_base + int(ctx_off[bi]), npos)

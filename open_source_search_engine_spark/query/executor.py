@@ -1629,45 +1629,29 @@ def _phrase_ok_udf(cq: CompiledQuery):
 
 def _search_reference(spark, rd: IndexReader, cq: CompiledQuery,
                       k: int | None, conf: EngineConf) -> DataFrame:
-    """Reference-scorer entry: picks single-pass (small lists, k=None,
-    quoted phrases) or the two-pass candidate plan (VERDICT r2 #2).
+    """Reference-scorer entry: the ctx-only single-term plan, or
+    ``_reference_exact`` for every other shape and size.
 
-    Two-pass (PosdbTable.cpp:4064 getMaxPossibleScore prefilter,
-    re-expressed as a candidate-generation pass):
-      pass 1  decode each termlist ONCE but emit only per-(term,doc)
-              SCALARS — the exact sum of per-posting single ctx scores
-              (refscore.precompute_postings) — no position/ctx arrays
-              cross Arrow and no array shuffle. Aggregate a sound
-              per-doc upper bound: the final score is min-combined over
-              terms and pairs, so min_slots(u·tfw²·wiki²) scaled by the
-              exact siterank/lang/page-temp multipliers bounds it from
-              above. Take the top-K' docs by bound.
-      pass 2  the exact scorer restricted to those candidates —
-              postings() block-skips via the codec skip pointers
-              (candidate_docs), so only candidate blocks stream-decode.
-      cert    results are byte-identical to the single-pass plan: the
-              k-th exact score must reach the bound of the best EXCLUDED
-              doc (every non-candidate's true score <= its bound <= M);
-              on shortfall K' quadruples and the loop reruns (the
-              reference's TopTree re-request dance, Msg39.cpp:428)."""
+    ``_reference_exact`` carries the getMaxPossibleScore prefilter
+    (PosdbTable.cpp:4064) inside each salt group: blobs decode ctx-only,
+    each doc gets a sound upper bound (slot-structured single bound
+    min-combined with the pair bound, PLANS.md §10), docs are visited in
+    bound order until the group's k-th exact score beats the next bound,
+    and only the visited docs' blocks get positions decoded. Salt
+    groups hold disjoint docs, so the union of the per-group top-k's
+    holds the global top-k: results are byte-identical to k=None."""
     pos_groups = cq.positive_groups
     if not pos_groups:
         return spark.createDataFrame([], "doc_id long, score double")
     tids = [int(g.term_ids[0]) for g in pos_groups]
     dfs = rd.df_of(tids)
-    # two-pass pays one extra fixed-cost job; worth it only when the
-    # decode volume dominates (big termlists) and a top-k bound exists.
-    # HF-shortcut substitution already truncates hot termlists to their
-    # champion slice (Msg2.cpp:262-284) — layering the candidate plan on
-    # top only adds jobs, so substituted queries stay single-pass.
-    hf_substituted = any(int(t) in rd.hf_ids for t in tids)
     # single-slot queries have NO pairs: minPairScore stays -1 and the
     # doc score is minSingleScore x the siterank multiplier
     # (PosdbTable.cpp:4199 — the min-combine over an empty pair set),
     # which reads ONLY ctx weights. The exact scorer then needs no
-    # position decode at all — one ctx-only pass beats both the
-    # position-decoding single-pass AND the two-pass plan (whose pass 1
-    # performs the same ctx-only decode just to compute bounds).
+    # position decode at all — one ctx-only pass beats the general
+    # plan, which decodes the same ctx stream for its bounds and then
+    # positions for every doc it visits.
     # Synonym-expanded groups keep the general path: variant sublists
     # merge in position order, which a ctx-only decode cannot
     # reconstruct across sublists. Multi-gen ANCHOR-CARRYING indexes
@@ -1685,10 +1669,6 @@ def _search_reference(spark, rd: IndexReader, cq: CompiledQuery,
             and (len(rd.gens) <= 1
                  or not rd.meta.get("has_anchors", True))):
         return _reference_single_term(spark, rd, cq, k, conf, dfs)
-    if (k is not None and not cq.quoted_runs and not hf_substituted
-            and sum(dfs.values())
-            >= conf.ref_two_pass_min_postings):
-        return _search_reference_two_pass(spark, rd, cq, k, conf, dfs)
     return _reference_exact(spark, rd, cq, k, conf, dfs)
 
 
@@ -1817,366 +1797,54 @@ def _reference_single_term(spark, rd: IndexReader, cq: CompiledQuery,
     return out.limit(k) if k is not None else out
 
 
-def _search_reference_two_pass(spark, rd: IndexReader, cq: CompiledQuery,
-                               k: int, conf: EngineConf,
-                               dfs: dict[int, int],
-                               candidate_docs: np.ndarray | None = None,
-                               require_all: bool = True) -> DataFrame:
-    # pass 1 runs ONCE per fetch level: it collects a deep ub prefix
-    # (driver-side, 16B/row) so certificate failures widen the
-    # candidate prefix without re-decoding every termlist — only the
-    # cheap candidate-restricted pass 2 reruns. The min-single bound
-    # sits ~2-4× above pair-dominated true scores on stopword docs, so
-    # the initial prefix starts at 32k rather than 8k (measured: 8k
-    # reran on every degenerate 3-term query, doubling latency).
-    kprime = max(256, 32 * k)
-    n_slots = len({int(g.term_ids[0]) for g in cq.positive_groups})
-    if n_slots == 2:
-        # 2-term shapes plateau hardest: the pair bound assumes the
-        # best-case distance divisor, so thousands of mid docs tie
-        # above the true kth and the certificate widened once on every
-        # 500k stopword pair (measured: rounds of 320 then 2533). A
-        # deeper FIRST prefix folds those into ONE pass-2 round — and
-        # each round pays a near-FULL termlist decode (candidates
-        # spread uniformly, so the block-restricted decode touches
-        # ~every block regardless of candidate count); the extra docs
-        # scored up front cost python time of the same order, so
-        # wall-clock lands within the box spread but the job count
-        # and decode volume drop deterministically.
-        kprime = max(kprime, 4096)
-    fetch = max(65_536, 4 * kprime)  # deep: 16B/row driver-side, and a
-    # deep prefix makes pass-1 refetches (full re-decode) rare
-    best: list[tuple[float, int]] = []  # (score, doc_id), merged rounds
-    scored_to = 0  # prefix length already exact-scored (delta rounds)
-    while True:
-        cand_all, ub_all = _reference_candidates(
-            spark, rd, cq, conf, dfs, fetch,
-            candidate_docs=candidate_docs, require_all=require_all)
-        if len(cand_all) == 0:
-            return spark.createDataFrame([], "doc_id long, score double")
-        exhausted = len(cand_all) < fetch  # every covered doc fetched
-        while True:
-            kprime = min(kprime, len(cand_all))
-            if kprime < len(cand_all):
-                # bound of the best excluded doc
-                m_bound = float(ub_all[kprime])
-            elif not exhausted:
-                # excluded docs lie beyond the fetch prefix; their ubs
-                # are <= the last fetched ub
-                m_bound = float(ub_all[-1])
-            else:
-                m_bound = None  # every covered doc is a candidate
-            # delta scoring: each widening round exact-scores only the
-            # docs not covered by a previous round; the true top-k of
-            # the union is contained in the union of per-round top-ks
-            delta = cand_all[scored_to:kprime]
-            if len(delta):
-                rows = (_reference_exact(spark, rd, cq, k, conf, dfs,
-                                         candidate_docs=np.sort(delta),
-                                         require_all=require_all)
-                        .collect())
-                best.extend((float(r["score"]), int(r["doc_id"]))
-                            for r in rows)
-                best.sort(key=lambda t: (-t[0], t[1]))
-                del best[k:]
-                scored_to = kprime
-            kth = best[k - 1][0] if len(best) >= k else float("-inf")
-            if m_bound is None or kth >= m_bound:
-                return (spark.createDataFrame(
-                            [(d, s) for s, d in best],
-                            "doc_id long, score double")
-                        .orderBy(F.col("score").desc(),
-                                 F.col("doc_id").asc()))
-            if kprime >= len(cand_all):
-                break  # prefix exhausted without certificate: refetch
-            if kth > float("-inf"):
-                # jump straight to the certified prefix: the k-th
-                # exact score only grows with a wider prefix, so the
-                # first index whose ub drops below the CURRENT kth is
-                # a sufficient prefix end (ub_all is desc-sorted) —
-                # one extra pass-2 round instead of log4 blind
-                # widening across a flat ub plateau
-                need = int(np.searchsorted(-ub_all, -kth,
-                                           side="right"))
-                kprime = max(kprime * 4, need)
-            else:
-                kprime *= 4
-        fetch *= 8
+def make_reference_group(cq: CompiledQuery, dfs: dict[int, int],
+                         n_docs: int, conf: EngineConf, k: int | None,
+                         n_salts: int, require_all: bool = True,
+                         cand=None, events=None,
+                         pt_default: float | None = None,
+                         counters: dict | None = None):
+    """applyInPandas body for one salt group of a reference-scorer query:
+    the per-shard PosdbTable pass, bound prefilter included
+    (PosdbTable.cpp:4064 getMaxPossibleScore), over the group's blob
+    rows from ``_wand_seg_frame``. Salt groups hold disjoint doc sets,
+    so the union of the per-group top-k's holds the global top-k and
+    the global ORDER BY ... LIMIT k is the Msg3a merge.
 
+    Each blob decodes ctx-only (positions skipped) and every doc gets a
+    ctx-only bound (slot single bound min-combined with the pair
+    bound). Docs are visited in that bound order until the group's
+    k-th exact score beats the next bound. Visited docs get their
+    blocks position-decoded, once per (blob, block), and a second
+    bound at their real term distances
+    (``refscore.positional_pair_bounds``); only docs that still reach
+    the heap are exact-scored. With ``k`` None every doc scores, so
+    blobs decode with positions up front.
 
-def _reference_candidates(spark, rd: IndexReader, cq: CompiledQuery,
-                          conf: EngineConf, dfs: dict[int, int],
-                          fetch: int,
-                          candidate_docs: np.ndarray | None = None,
-                          require_all: bool = True):
-    """Pass 1: the top-``fetch`` covered docs by per-doc upper bound.
-    Returns (doc_ids desc-ub, ubs desc) as parallel numpy arrays —
-    the caller prefixes them for the certificate loop; a result
-    shorter than ``fetch`` means every covered doc was fetched.
-
-    candidate_docs restricts the pass to a pre-computed membership set
-    (boolean-reference mode, r5): decode block-skips to candidate
-    blocks and require_all=False keeps every candidate with >= 1 slot
-    — the bound stays sound because every F.least/null-propagation
-    step below evaluates only the slots/pairs the doc actually has,
-    exactly the min-combine domain of score_doc on present slots."""
+    ``cand`` (a broadcast of sorted uint64 doc ids) restricts decode to
+    the candidate blocks and docs; ``require_all=False`` scores every
+    doc over the slots it has (boolean reference mode). ``events``
+    (``IndexReader.live_events``) drops postings a newer generation or
+    a tombstone shadows. ``pt_default`` (page temperature on) is the
+    multiplier of docs missing from the cogrouped registry frame.
+    ``counters``, for in-process replay, accumulates ``blocks`` (blocks
+    of the positive-term blobs), ``blocks_pos_decoded`` and
+    ``docs_scored``."""
     from .refscore import (
         SITERANK_MULTIPLIER,
         WIKI_BIGRAM_WEIGHT,
         ScoringWeights,
         bound_factor_rows,
+        pair_qdist,
+        positional_pair_bounds,
         precompute_postings,
-        term_freq_weight,
-    )
-
-    pos_groups = cq.positive_groups
-    n = rd.n_docs
-    slot_of: dict[int, int] = {}
-    for g in pos_groups:
-        slot_of.setdefault(int(g.term_ids[0]), len(slot_of))
-    n_req = len(slot_of)
-    tfw_of = {t: term_freq_weight(dfs[t], n, conf) for t in slot_of}
-    weights = ScoringWeights(conf)
-    # variant sublists: syn termlists map to their group's slot; their
-    # raw u (no syn downweight) and the primary tfw make the bound a
-    # (sound) overestimate — pass 2 applies the exact synW^2
-    tid_slot: dict[int, int] = dict(slot_of)
-    slot_tfw: dict[int, float] = {t: tfw_of[t] for t in slot_of}
-    for g in pos_groups:
-        s = slot_of[int(g.term_ids[0])]
-        for st in g.syn_term_ids:
-            st = int(st)
-            if st not in tid_slot:
-                tid_slot[st] = s
-                slot_tfw[st] = tfw_of[int(g.term_ids[0])]
-    tids = sorted(tid_slot)
-
-    seg = rd.segments_for(tids).select("term_id", "postings", "gen")
-    par = spark.sparkContext.defaultParallelism
-    seg = seg.repartition(par)
-
-    bc = (spark.sparkContext.broadcast(
-              candidate_docs.astype(np.uint64))
-          if candidate_docs is not None else None)
-    bc_ev = rd.live_events()
-
-    def decode_u(iterator):
-        from ..functions.codec import (
-            BlockMeta,
-            blocks_for_candidates,
-            decode_blocks,
-            live_mask,
-        )
-
-        for pdf in iterator:
-            out = []
-            for term_id, blob, g in zip(pdf["term_id"], pdf["postings"],
-                                        pdf["gen"]):
-                # ctx-only decode: the bound needs per-posting ctx
-                # weights but no positions — skip the heaviest varint
-                # span in the blob; with a candidate set, skip-pointer
-                # straight to candidate blocks too
-                if bc is not None:
-                    meta = BlockMeta(bytes(blob))
-                    bsel = blocks_for_candidates(meta, bc.value)
-                    if len(bsel) == 0:
-                        continue
-                    d = decode_blocks(bytes(blob), bsel, True, meta,
-                                      ctx_only=True)
-                else:
-                    d = decode_blocks(bytes(blob), None, True,
-                                      ctx_only=True)
-                docs = d["doc_ids"]
-                if not len(docs):
-                    continue
-                cmask = None
-                if bc is not None:
-                    cmask = np.isin(docs, bc.value)
-                if bc_ev is not None:
-                    live = live_mask(docs, int(g), *bc_ev.value)
-                    cmask = live if cmask is None else cmask & live
-                if cmask is not None and not cmask.any():
-                    continue
-                tf64 = d["tfs"].astype(np.int64)
-                if len(d["positions"]):
-                    pre = precompute_postings(
-                        d["positions"].astype(np.int64),
-                        d["ctxs"].astype(np.int64), weights)
-                    # slot-structured bounds (max per modified
-                    # hashgroup + INLINKTEXT sum), ~tf× tighter than
-                    # the old every-posting sum on stopword docs —
-                    # fewer certificate-loop reruns downstream; the
-                    # pair factors bound min_pair, which dominates the
-                    # min-combine on proximity-flat stopword docs
-                    doc_of_post = np.repeat(
-                        np.arange(len(docs), dtype=np.int64), tf64)
-                    u, pf_s, pf_g, pf_l = bound_factor_rows(
-                        pre, doc_of_post, len(docs))
-                else:
-                    u = np.zeros(len(docs), dtype=np.float64)
-                    pf_s = pf_g = pf_l = u
-                frame = pd.DataFrame({
-                    "term_id": np.full(len(docs), term_id, np.int64),
-                    "doc_id": docs.astype(np.int64),
-                    "rank": d["ranks"].astype(np.int32),
-                    "u": u,
-                    "pf_s": pf_s,
-                    "pf_g": pf_g,
-                    "pf_l": pf_l,
-                })
-                if cmask is not None:
-                    frame = frame[cmask]
-                out.append(frame)
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    u_rows = seg.mapInPandas(
-        decode_u,
-        schema=("term_id long, doc_id long, rank int, u double, "
-                "pf_s double, pf_g double, pf_l double"))
-
-    slot_expr = F.create_map(
-        *[x for t in tids for x in (F.lit(int(t)),
-                                    F.lit(tid_slot[t]))])
-    # WIKI² only when the query carries wiki phrases — the exact path
-    # builds TermLists with half_stop=False so singles never
-    # wiki-boost, and min_score <= min_single keeps the bound sound
-    # (same reasoning as score_batch's in-batch bound)
-    wiki_factor = (float(WIKI_BIGRAM_WEIGHT) ** 2
-                   if any(int(g.wiki_phrase_id) for g in pos_groups)
-                   else 1.0)
-    tfw_slot = [0.0] * n_req
-    for t, s in slot_of.items():
-        tfw_slot[s] = tfw_of[t]
-    # per-SLOT pivot in ONE groupBy (sums across a slot's merged
-    # variant rows — min over raw rows would undercut the bound once a
-    # slot holds several sublists; one exchange instead of the old
-    # two-level groupBy's two)
-    aggs = []
-    for s in range(n_req):
-        cond = F.col("slot") == F.lit(s)
-        aggs += [
-            F.sum(F.when(cond, F.col("u"))).alias(f"u{s}"),
-            F.sum(F.when(cond, F.col("pf_s"))).alias(f"s{s}"),
-            F.max(F.when(cond, F.col("pf_g"))).alias(f"g{s}"),
-            F.sum(F.when(cond, F.col("pf_l"))).alias(f"l{s}"),
-        ]
-    per_doc = (
-        u_rows
-        .withColumn("slot", slot_expr[F.col("term_id")])
-        .groupBy("doc_id")
-        .agg(*aggs, F.first("rank").alias("rank"))
-    )
-    if require_all:
-        covered = F.lit(True)
-        for s in range(n_req):
-            covered = covered & F.col(f"u{s}").isNotNull()
-        per_doc = per_doc.where(covered)
-    # require_all=False (boolean mode): membership was decided by the
-    # vote buffer; every candidate with >= 1 slot stays and the null
-    # slots fall out of the least() chains below
-    # ub0 = min(min-single bound, min-pair bound): the final score is
-    # min(min_pair, min_single) × multipliers, and on proximity-flat
-    # stopword docs min_pair binds — the single-only bound certified
-    # ~12% above true scores across a plateau of thousands of docs
-    singles = [F.col(f"u{s}")
-               * F.lit(float(tfw_slot[s]) ** 2 * wiki_factor)
-               for s in range(n_req)]
-    ub0 = F.least(*singles) if n_req > 1 else singles[0]
-    if n_req >= 2:
-        pair_bounds = []
-        for i in range(n_req):
-            for j in range(i + 1, n_req):
-                c1 = F.col(f"s{i}") * F.col(f"g{j}")
-                c2 = F.col(f"s{j}") * F.col(f"g{i}")
-                nolink = ((F.col(f"l{i}") == F.lit(0.0))
-                          & (F.col(f"l{j}") == F.lit(0.0)))
-                core = (F.when(nolink, F.least(c1, c2))
-                        .otherwise(c1 + c2
-                                   + F.col(f"l{i}") * F.col(f"l{j}")))
-                pair_bounds.append(
-                    core * F.lit(100.0 * float(tfw_slot[i])
-                                 * float(tfw_slot[j])))
-        pair_ub = (F.least(*pair_bounds) if len(pair_bounds) > 1
-                   else pair_bounds[0])
-        ub0 = F.least(ub0, pair_ub)
-    per_doc = per_doc.withColumn("ub0", ub0)
-    if cq.negative_groups:
-        neg_tids = [g.term_ids[0] for g in cq.negative_groups]
-        neg_docs = rd.postings(neg_tids).select("doc_id").distinct()
-        per_doc = per_doc.join(neg_docs, "doc_id", "left_anti")
-
-    sr = F.shiftright(F.col("rank"), 6).cast("double")
-    lang = (F.col("rank").bitwiseAND(63)).cast("long")
-    adj = sr + F.greatest(F.lit(15.0) - sr, F.lit(0.0)) / F.lit(3.0)
-    ub = (F.col("ub0")
-          * (adj * F.lit(float(SITERANK_MULTIPLIER)) + F.lit(1.0))
-          * F.lit(1.001) + F.lit(1e-12))
-    if weights.query_lang != 0:
-        ub = ub * (
-            F.when(lang == F.lit(int(weights.query_lang)),
-                   F.lit(float(weights.same_lang_w)))
-            .when(lang == F.lit(0), F.lit(float(weights.unknown_lang_w)))
-            .otherwise(F.lit(1.0)))
-    if conf.use_page_temperature:
-        from .pagetemp import scaled_temp_frame
-
-        ptf, pt_default = scaled_temp_frame(spark, rd.paths.root, conf)
-        if ptf is not None:
-            per_doc = (per_doc.join(ptf, "doc_id", "left")
-                       .withColumn("page_temp",
-                                   F.coalesce("page_temp",
-                                              F.lit(float(pt_default)))))
-        else:
-            per_doc = per_doc.withColumn("page_temp",
-                                         F.lit(float(pt_default)))
-        ub = ub * F.col("page_temp")
-    top = (per_doc.withColumn("ub", ub)
-           .select("doc_id", "ub")
-           .orderBy(F.col("ub").desc(), F.col("doc_id").asc())
-           .limit(fetch)
-           .collect())
-    cand_all = np.array([r["doc_id"] for r in top], dtype=np.uint64)
-    ub_all = np.array([r["ub"] for r in top], dtype=np.float64)
-    return cand_all, ub_all
-
-
-def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
-                     k: int | None, conf: EngineConf,
-                     dfs: dict[int, int] | None = None,
-                     candidate_docs: np.ndarray | None = None,
-                     require_all: bool = True) -> DataFrame:
-    """Reference-scorer exact path (SURVEY.md §4.6): decode positions +
-    context bytes, score each candidate doc with the full Gigablast
-    formula chain (refscore.score_doc: non-body matrix -> singles ->
-    sliding window -> window-restricted pair scan -> min-combine +
-    siterank). AND semantics over the positive groups (docid-vote
-    intersection, PosdbTable.cpp:2110-2196); require_all=False scores
-    every doc over the slots it has (boolean reference mode).
-
-    One ``groupBy("salt").applyInPandas`` stage over the compressed
-    blob rows (PLANS.md §23): each salt group decodes its blobs
-    (block-skipping to ``candidate_docs`` when given), drops postings
-    shadowed by a newer generation or a tombstone (``codec.live_mask``
-    over ``IndexReader.live_events``) and docs with a live
-    negative-term posting, then scores from the flat position/ctx
-    arrays with the per-doc bound + top-k heap. The exchange carries
-    blob rows only; no decoded posting row leaves Python."""
-    from .refscore import (
-        ScoringWeights,
         score_doc,
         term_freq_weight,
+        termlist_from_slices,
     )
 
     pos_groups = cq.positive_groups
-    if not pos_groups:
-        return spark.createDataFrame([], "doc_id long, score double")
-    tids = [int(g.term_ids[0]) for g in pos_groups]
-    if dfs is None:
-        dfs = rd.df_of(tids)
-    n = rd.n_docs
     # per-group query metadata, in group order (term slot order)
-    slot_of = {}
+    slot_of: dict[int, int] = {}
     for g in pos_groups:
         slot_of.setdefault(int(g.term_ids[0]), len(slot_of))
     n_req = len(slot_of)
@@ -2186,7 +1854,7 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
     quote_ids = [-1] * n_req
     for g in pos_groups:
         s = slot_of[int(g.term_ids[0])]
-        tfws[s] = term_freq_weight(dfs[int(g.term_ids[0])], n, conf)
+        tfws[s] = term_freq_weight(dfs[int(g.term_ids[0])], n_docs, conf)
         qpos[s] = int(g.qpos)
         wiki_ids[s] = int(g.wiki_phrase_id)
     for qi, run in enumerate(cq.quoted_runs):
@@ -2195,6 +1863,15 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
             if t in slot_of:
                 quote_ids[slot_of[t]] = qi
     weights = ScoringWeights(conf)
+    tfw_of = np.array(tfws, dtype=np.float64)
+    # The WIKI² factor applies only when the query carries wiki
+    # phrases: this path builds every TermList with half_stop=False,
+    # so singles never wiki-boost, but pair scores with matching wiki
+    # ids can reach WIKI_WEIGHT× — min_score <= min_single keeps the
+    # bound sound without it; the guard is defensive for a future
+    # half-stop wiring.
+    wiki_factor = (float(WIKI_BIGRAM_WEIGHT) ** 2
+                   if any(wiki_ids) else 1.0)
 
     # variant sublists (PosdbTable.cpp:2879 mergeTermSubListsForDocId):
     # each group's synonym termlists merge into ONE per-slot position
@@ -2211,76 +1888,71 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
             if st not in tid_slot:
                 tid_slot[st] = s
                 syn_tids.add(st)
-    all_tids = sorted(tid_slot)
-
-    # per-shard decode-and-score (Msg39/PosdbTable), then the Msg3a
-    # top-k merge: salt groups hold disjoint doc sets (_wand_seg_frame),
-    # so every posting of a doc — positive, variant or negative term —
-    # meets in one group
+    stids = np.array(sorted(tid_slot), dtype=np.int64)
+    sslots = np.array([tid_slot[int(t)] for t in stids], dtype=np.int64)
+    syn_sorted = np.array(sorted(syn_tids), dtype=np.int64)
     neg_tids = {int(g.term_ids[0]) for g in cq.negative_groups}
-    n_salts = rd.meta.get("conf", {}).get("n_salts", rd.conf.n_salts)
-    seg = _wand_seg_frame(rd, sorted(set(all_tids) | neg_tids), n_salts)
-    sc = spark.sparkContext
-    bc = (sc.broadcast(candidate_docs.astype(np.uint64))
-          if candidate_docs is not None else None)
-    bc_ev = rd.live_events()
-
-    # page-temperature registry (query/pagetemp.py): corpus-sized, so it
-    # is co-grouped by the same doc residue, never collected;
-    # unregistered docs get the default-temperature multiplier
-    use_pt = conf.use_page_temperature
-    ptf = None
-    if use_pt:
-        from .pagetemp import scaled_temp_frame
-
-        ptf, pt_default = scaled_temp_frame(spark, rd.paths.root, conf)
-
-    from .refscore import SITERANK_MULTIPLIER, WIKI_BIGRAM_WEIGHT, \
-        bound_factor_rows, precompute_postings, termlist_from_slices
+    use_pt = pt_default is not None
+    lazy = k is not None
+    if counters is not None:
+        for c in ("blocks", "blocks_pos_decoded", "docs_scored"):
+            counters.setdefault(c, 0)
 
     def score_group(pdf: pd.DataFrame,
                     pt_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
         import heapq
 
-        from ..functions.codec import BlockMeta, blocks_for_candidates, \
-            live_mask, span_index
+        from ..functions.codec import BLOCK, BlockMeta, \
+            blocks_for_candidates, live_mask, span_index
 
+        empty = pd.DataFrame(columns=["doc_id", "score"])
         if not len(pdf):
-            return pd.DataFrame(columns=["doc_id", "score"])
+            return empty
         salt = int(pdf["salt"].iloc[0])
-        cand = bc.value if bc is not None else None
+        cv = cand.value if cand is not None else None
         # (term, gen) row order: the order a slot's rows of one doc
         # merge in, independent of the exchange's arrival order
         pdf = pdf.sort_values(["term_id", "gen"], kind="mergesort")
-        doc_l, tid_l, rank_l, tf_l, pos_l, ctx_l, neg_l = \
-            [], [], [], [], [], [], []
+        blobs: list[tuple[bytes, BlockMeta]] = []  # positive rows
+        doc_l, tid_l, rank_l, tf_l, pos_l, ctx_l, src_l, blk_l, neg_l = \
+            [], [], [], [], [], [], [], [], []
         for tid, blob, g, shared in zip(pdf["term_id"], pdf["postings"],
                                         pdf["gen"], pdf["shared"]):
             t = int(tid)
             is_pos = t in tid_slot
             b = bytes(blob)
-            if cand is not None:
+            meta = BlockMeta(b)
+            bsel = None
+            if cv is not None:
                 # skip-pointer seek: decode only blocks whose docId
                 # range intersects the candidate set (RdbMap analog)
-                meta = BlockMeta(b)
-                bsel = blocks_for_candidates(meta, cand)
+                bsel = blocks_for_candidates(meta, cv)
                 if not len(bsel):
                     continue
-                d = decode_blocks(b, bsel, is_pos, meta)
-            else:
-                d = decode_blocks(b, None, is_pos)
+            d = decode_blocks(b, bsel, is_pos, meta, ctx_only=lazy)
             docs = d["doc_ids"]
             keep = np.ones(len(docs), dtype=bool)
             if shared:
                 keep &= (docs % np.uint64(n_salts)) == np.uint64(salt)
-            if cand is not None:
-                keep &= np.isin(docs, cand)
-            if bc_ev is not None:
-                keep &= live_mask(docs, int(g), *bc_ev.value)
+            if cv is not None:
+                keep &= np.isin(docs, cv)
+            if events is not None:
+                keep &= live_mask(docs, int(g), *events.value)
             if t in neg_tids:
                 neg_l.append(docs[keep])
             if not is_pos or not keep.any():
                 continue
+            if counters is not None:
+                counters["blocks"] += meta.nblocks
+                if not lazy:
+                    counters["blocks_pos_decoded"] += (
+                        meta.nblocks if bsel is None else len(bsel))
+            # block of each decoded doc: where its positions live
+            if bsel is None:
+                blk = np.arange(len(docs), dtype=np.int64) // BLOCK
+            else:
+                blk = np.repeat(bsel, [meta.block_doc_count(int(bi))
+                                       for bi in bsel])
             tfs = d["tfs"].astype(np.int64)
             pos, ctx = d["positions"], d["ctxs"]
             if not keep.all():
@@ -2292,11 +1964,16 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
             tf_l.append(tfs)
             pos_l.append(pos)
             ctx_l.append(ctx)
+            src_l.append(np.full(len(tfs), len(blobs), dtype=np.int64))
+            blk_l.append(blk[keep])
+            blobs.append((b, meta))
         if not doc_l:
-            return pd.DataFrame(columns=["doc_id", "score"])
+            return empty
         doc_arr = np.concatenate(doc_l).astype(np.int64)
         tid_arr = np.concatenate(tid_l)
         rank_arr = np.concatenate(rank_l).astype(np.int64)
+        src_arr = np.concatenate(src_l)
+        blk_arr = np.concatenate(blk_l)
         lens = np.concatenate(tf_l)
         row_off = np.concatenate(([0], np.cumsum(lens)))
         pos_all = np.concatenate(pos_l).astype(np.int64)
@@ -2306,20 +1983,17 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
         # slot of each row; variant rows get the syn flag forced into
         # their ctx BEFORE precompute so the kernel's synW^2 applies
         # (mergeTermSubListsForDocId sets the syn bits on merged lists)
-        stids = np.array(sorted(tid_slot), dtype=np.int64)
-        sslots = np.array([tid_slot[int(t)] for t in stids],
-                          dtype=np.int64)
         six = np.searchsorted(stids, tid_arr)
         slot_arr = sslots[np.clip(six, 0, len(stids) - 1)]
-        if syn_tids:
-            syn_sorted = np.array(sorted(syn_tids), dtype=np.int64)
+        if len(syn_sorted):
             row_is_syn = np.isin(tid_arr, syn_sorted)
             if row_is_syn.any():
                 rep_syn = np.repeat(row_is_syn, lens)
                 ctx_all = np.where(rep_syn, (ctx_all & ~0x3) | 0x2,
                                    ctx_all)
         # group-global precompute: unpack + weights + per-posting single
-        # scores over the flat postings of EVERY row at once
+        # scores over the flat postings of EVERY row at once; reads only
+        # ctx, so pre["pos"] is filled in per visited doc (lazy decode)
         pre = precompute_postings(pos_all, ctx_all, weights)
         post_row = np.repeat(np.arange(n_rows, dtype=np.int64), lens)
         row_sum, pf_s, pf_g, pf_l = bound_factor_rows(pre, post_row,
@@ -2332,10 +2006,11 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
             rows = rows[~np.isin(doc_arr,
                                  np.concatenate(neg_l).astype(np.int64))]
             if not len(rows):
-                return pd.DataFrame(columns=["doc_id", "score"])
+                return empty
         rows = rows[np.argsort(doc_arr[rows], kind="stable")]
-        doc_arr, tid_arr, rank_arr, slot_arr = (
-            doc_arr[rows], tid_arr[rows], rank_arr[rows], slot_arr[rows])
+        doc_arr, tid_arr, rank_arr, slot_arr, src_arr, blk_arr = (
+            doc_arr[rows], tid_arr[rows], rank_arr[rows], slot_arr[rows],
+            src_arr[rows], blk_arr[rows])
         row_sum, pf_s, pf_g, pf_l = (
             row_sum[rows], pf_s[rows], pf_g[rows], pf_l[rows])
         row_start, row_end = row_off[rows], row_off[rows + 1]
@@ -2344,46 +2019,32 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
             np.concatenate(([True], doc_arr[1:] != doc_arr[:-1])))
         bounds = np.append(bounds, len(doc_arr))
         n_docs_b = len(bounds) - 1
-        # per-doc sound upper bound (getMaxPossibleScore analog,
-        # PosdbTable.cpp:4064 prefilter): the final score is
-        # min-combined, so every SLOT's single-score bound bounds it
-        # (sum over the slot's merged rows — min over rows would be
-        # unsound once variants put several rows in one slot);
-        # siterank adjustment bounded by the max inlinker rank 15.
-        # The WIKI² factor applies only when the query carries wiki
-        # phrases: this path builds every TermList with
-        # half_stop=False, so singles never wiki-boost, but pair
-        # scores with matching wiki ids can reach WIKI_WEIGHT× —
-        # min_score <= min_single keeps the bound sound without it;
-        # the guard is defensive for a future half-stop wiring.
-        tfw_of = np.zeros(n_req)
-        for t, sidx in slot_of.items():
-            tfw_of[sidx] = tfws[sidx]
-        wiki_factor = (float(WIKI_BIGRAM_WEIGHT) ** 2
-                       if any(wiki_ids) else 1.0)
+        # per-doc sound upper bound (getMaxPossibleScore analog): the
+        # final score is min-combined, so every SLOT's single-score
+        # bound bounds it (sum over the slot's merged rows — min over
+        # rows would be unsound once variants put several rows in one
+        # slot); siterank adjustment bounded by the max inlinker rank 15
         u_row = (row_sum * tfw_of[slot_arr] * tfw_of[slot_arr]
                  * wiki_factor)
-        is_start = np.concatenate(([True], doc_arr[1:] != doc_arr[:-1]))
-        doc_of_row = np.cumsum(is_start) - 1
+        doc_of_row = np.repeat(np.arange(n_docs_b), np.diff(bounds))
         slot_sum = np.zeros((n_docs_b, n_req), dtype=np.float64)
         np.add.at(slot_sum, (doc_of_row, slot_arr), u_row)
         slot_seen = np.zeros((n_docs_b, n_req), dtype=bool)
         slot_seen[doc_of_row, slot_arr] = True
         covered = slot_seen.sum(axis=1)
         ub = np.where(slot_seen, slot_sum, np.inf).min(axis=1)
-        if n_req >= 2 and require_all:
+        if n_req >= 2:
             # pair bound (see refscore.pair_factor_rows): min_pair
             # binds on proximity-flat docs where the single bound
-            # plateaus above the true scores; partial-coverage docs
-            # (require_all=False) skip it — a missing slot would make
-            # the pair product vacuously 0 and unsound
+            # plateaus above the true scores. Only pairs whose two slots
+            # the doc has are scored (a boolean-mode doc min-combines
+            # over its present slots), so only those bound it
             s_slot = np.zeros((n_docs_b, n_req), dtype=np.float64)
             g_slot = np.zeros((n_docs_b, n_req), dtype=np.float64)
             l_slot = np.zeros((n_docs_b, n_req), dtype=np.float64)
             np.add.at(s_slot, (doc_of_row, slot_arr), pf_s)
             np.maximum.at(g_slot, (doc_of_row, slot_arr), pf_g)
             np.add.at(l_slot, (doc_of_row, slot_arr), pf_l)
-            pair_ub = np.full(n_docs_b, np.inf)
             for i in range(n_req):
                 for j in range(i + 1, n_req):
                     c1 = s_slot[:, i] * g_slot[:, j]
@@ -2392,18 +2053,19 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                     core = np.where(
                         nolink, np.minimum(c1, c2),
                         c1 + c2 + l_slot[:, i] * l_slot[:, j])
-                    pair_ub = np.minimum(
-                        pair_ub,
-                        core * (100.0 * tfw_of[i] * tfw_of[j]))
-            ub = np.minimum(ub, pair_ub)
-        sr_doc = (rank_arr[bounds[:-1]].astype(np.int64) >> 6)
-        lang_doc = rank_arr[bounds[:-1]].astype(np.int64) & 63
+                    both = slot_seen[:, i] & slot_seen[:, j]
+                    ub = np.minimum(ub, np.where(
+                        both, core * (100.0 * tfw_of[i] * tfw_of[j]),
+                        np.inf))
+        sr_doc = rank_arr[bounds[:-1]] >> 6
+        lang_doc = rank_arr[bounds[:-1]] & 63
         adj = sr_doc + np.maximum(15 - sr_doc, 0) / 3.0
-        ub = ub * (adj * float(SITERANK_MULTIPLIER) + 1.0) * 1.001 + 1e-12
+        # the final multiplier chain scales the bound too: siterank,
+        # then the lang boost (PosdbTable.cpp:4254-4275), then the page
+        # temperature — all positive
+        mult = adj * float(SITERANK_MULTIPLIER) + 1.0
         if weights.query_lang != 0:
-            # lang boost is part of the final multiplier chain
-            # (PosdbTable.cpp:4254-4275), so it scales the bound too
-            ub = ub * np.where(
+            mult = mult * np.where(
                 lang_doc == weights.query_lang, float(weights.same_lang_w),
                 np.where(lang_doc == 0, float(weights.unknown_lang_w), 1.0))
         pt_doc = None
@@ -2417,17 +2079,14 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                 pt_doc = np.where(reg[ix] == first,
                                   pt_pdf["page_temp"].to_numpy()[ix],
                                   pt_doc)
-            ub = ub * pt_doc  # positive multiplier scales the bound too
+            mult = mult * pt_doc
+        ub = ub * mult * 1.001 + 1e-12
 
-        order = (np.argsort(-ub) if k is not None
-                 else np.arange(n_docs_b))
-        heap: list[float] = []
         out_docs, out_scores = [], []
-        for d in order:
-            if require_all and covered[d] < n_req:
-                continue
-            if k is not None and len(heap) >= k and ub[d] < heap[0]:
-                break  # docs are ub-descending: none below can enter
+        n_scored = 0
+
+        def exact(d):
+            nonlocal n_scored
             s, e = bounds[d], bounds[d + 1]
             rows_by_slot: list[list[int]] = [[] for _ in range(n_req)]
             for r in range(s, e):
@@ -2437,9 +2096,6 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
             for sidx in range(n_req):
                 rs = rows_by_slot[sidx]
                 if not rs:
-                    if require_all:
-                        terms = None
-                        break
                     continue  # boolean mode: score present slots only
                 present.append(sidx)
                 if len(rs) == 1:
@@ -2457,9 +2113,7 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                     [np.arange(row_start[r], row_end[r]) for r in rs])
                 idx = idx[np.argsort(pre["pos"][idx], kind="stable")]
                 terms.append(termlist_from_slices(pre, idx))
-            if terms is None or not terms:
-                continue
-            if require_all or len(present) == n_req:
+            if len(present) == n_req:
                 sub_tfws, sub_qpos = tfws, qpos
                 sub_wiki, sub_quote = wiki_ids, quote_ids
             else:
@@ -2467,22 +2121,153 @@ def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
                 sub_qpos = [qpos[i] for i in present]
                 sub_wiki = [wiki_ids[i] for i in present]
                 sub_quote = [quote_ids[i] for i in present]
+            n_scored += 1
             sc = score_doc(terms, sub_tfws, sub_qpos, int(sr_doc[d]),
                            weights,
                            wiki_ids=sub_wiki, quote_ids=sub_quote,
                            doc_lang=int(lang_doc[d]),
                            page_temp=(float(pt_doc[d]) if use_pt else 1.0))
-            if sc is None:
-                continue  # minScore <= 0: reference skips the doc
-            out_docs.append(int(doc_arr[s]))
-            out_scores.append(sc)
-            if k is not None:
+            if sc is not None:  # minScore <= 0: reference skips the doc
+                out_docs.append(int(doc_arr[s]))
+                out_scores.append(sc)
+            return sc
+
+        if k is None:
+            for d in range(n_docs_b):
+                if not require_all or covered[d] == n_req:
+                    exact(d)
+            if counters is not None:
+                counters["docs_scored"] += n_scored
+            return pd.DataFrame({"doc_id": out_docs, "score": out_scores})
+
+        # (blob, block) -> positions decoded for the visited docs
+        memo: dict[tuple[int, int], dict] = {}
+
+        def fill_positions(rows):
+            key = src_arr[rows] * (1 << 32) + blk_arr[rows]
+            o = np.argsort(key, kind="stable")
+            rows, key = rows[o], key[o]
+            cuts = np.flatnonzero(np.concatenate(
+                ([True], key[1:] != key[:-1], [True])))
+            for c0, c1 in zip(cuts[:-1], cuts[1:]):
+                rs = rows[c0:c1]
+                mk = (int(src_arr[rs[0]]), int(blk_arr[rs[0]]))
+                bd = memo.get(mk)
+                if bd is None:
+                    b, meta = blobs[mk[0]]
+                    bd = decode_blocks(b, [mk[1]], True, meta)
+                    tf64 = bd["tfs"].astype(np.int64)
+                    bd["pstart"] = np.cumsum(tf64) - tf64
+                    memo[mk] = bd
+                li = np.searchsorted(bd["doc_ids"],
+                                     doc_arr[rs].astype(np.uint64))
+                n = row_end[rs] - row_start[rs]
+                pre["pos"][span_index(row_start[rs], n)] = \
+                    bd["positions"][span_index(bd["pstart"][li], n)]
+
+        # top-k: visit docs in bound order, in growing chunks. A chunk's
+        # blocks get positions decoded, which gives each doc a pair
+        # bound at its real term distances; a doc exact-scores only if
+        # that bound still reaches the heap, and no doc past the
+        # ctx-only bound break is decoded beyond the last chunk
+        pairs = [(i, j, pair_qdist(qpos[i], qpos[j], wiki_ids[i],
+                                   wiki_ids[j], quote_ids[i], quote_ids[j]))
+                 for i in range(n_req) for j in range(i + 1, n_req)]
+        pair_tfw = np.array([tfws[i] * tfws[j] for i, j, _ in pairs])
+        order = np.argsort(-ub, kind="stable")
+        if require_all:
+            order = order[covered[order] == n_req]
+        n_rows_doc = np.diff(bounds)
+        heap: list[float] = []
+        at, step = 0, max(2 * k, 32)
+        while at < len(order) and not (
+                len(heap) >= k and ub[order[at]] < heap[0]):
+            chunk = order[at:at + step]
+            at += step
+            step = min(2 * step, 1024)
+            rows = span_index(bounds[chunk], n_rows_doc[chunk])
+            fill_positions(rows)
+            ub2 = ub[chunk]
+            if pairs:
+                n = row_end[rows] - row_start[rows]
+                local = np.repeat(np.arange(len(chunk)), n_rows_doc[chunk])
+                pb = positional_pair_bounds(
+                    pre, span_index(row_start[rows], n),
+                    np.repeat(local, n), np.repeat(slot_arr[rows], n),
+                    len(chunk), pairs)
+                pb = (pb * pair_tfw).min(axis=1)
+                ub2 = np.minimum(ub2, pb * mult[chunk] * 1.001 + 1e-12)
+            for d, u2 in zip(chunk, ub2):
+                if len(heap) >= k:
+                    if ub[d] < heap[0]:
+                        break  # docs are ub-descending: none below can enter
+                    if u2 < heap[0]:
+                        continue
+                sc = exact(d)
+                if sc is None:
+                    continue
                 if len(heap) < k:
                     heapq.heappush(heap, sc)
                 elif sc > heap[0]:
                     heapq.heapreplace(heap, sc)
+        if counters is not None:
+            counters["docs_scored"] += n_scored
+            counters["blocks_pos_decoded"] += len(memo)
         return pd.DataFrame({"doc_id": out_docs, "score": out_scores})
 
+    return score_group
+
+
+def _reference_exact(spark, rd: IndexReader, cq: CompiledQuery,
+                     k: int | None, conf: EngineConf,
+                     dfs: dict[int, int] | None = None,
+                     candidate_docs: np.ndarray | None = None,
+                     require_all: bool = True) -> DataFrame:
+    """Reference-scorer exact path (SURVEY.md §4.6): score each doc with
+    the full Gigablast formula chain (refscore.score_doc: non-body
+    matrix -> singles -> sliding window -> window-restricted pair scan
+    -> min-combine + siterank). AND semantics over the positive groups
+    (docid-vote intersection, PosdbTable.cpp:2110-2196);
+    require_all=False scores every doc over the slots it has (boolean
+    reference mode, ``candidate_docs`` = the vote buffer's members).
+
+    One ``groupBy("salt").applyInPandas`` stage over the compressed
+    blob rows (PLANS.md §23, §26): each salt group runs
+    ``make_reference_group`` — ctx-only decode, newest-wins and
+    negative-term masks, the per-doc bound, the bound-ordered top-k
+    heap, and a position decode of only the blocks the visited docs
+    live in. Per-shard bounds, then the Msg3a top-k merge: the
+    exchange carries blob rows only, and no decoded posting row or
+    candidate list leaves Python."""
+    pos_groups = cq.positive_groups
+    if not pos_groups:
+        return spark.createDataFrame([], "doc_id long, score double")
+    if dfs is None:
+        dfs = rd.df_of([int(g.term_ids[0]) for g in pos_groups])
+    # salt groups hold disjoint doc sets (_wand_seg_frame), so every
+    # posting of a doc — positive, variant or negative term — meets in
+    # one group
+    tids = ({int(t) for g in pos_groups
+             for t in (g.term_ids[0], *g.syn_term_ids)}
+            | {int(g.term_ids[0]) for g in cq.negative_groups})
+    n_salts = rd.meta.get("conf", {}).get("n_salts", rd.conf.n_salts)
+    seg = _wand_seg_frame(rd, sorted(tids), n_salts)
+    cand = (spark.sparkContext.broadcast(candidate_docs.astype(np.uint64))
+            if candidate_docs is not None else None)
+
+    # page-temperature registry (query/pagetemp.py): corpus-sized, so it
+    # is co-grouped by the same doc residue, never collected;
+    # unregistered docs get the default-temperature multiplier
+    ptf = pt_default = None
+    if conf.use_page_temperature:
+        from .pagetemp import scaled_temp_frame
+
+        ptf, pt_default = scaled_temp_frame(spark, rd.paths.root, conf)
+        pt_default = float(pt_default)
+
+    score_group = make_reference_group(
+        cq, dfs, rd.n_docs, conf, k, n_salts, require_all=require_all,
+        cand=cand, events=rd.live_events(), pt_default=pt_default)
     schema = "doc_id long, score double"
     if ptf is not None:
         reg = ptf.withColumn(
@@ -2645,22 +2430,11 @@ def _search_boolean_reference(spark, rd: IndexReader, cq: CompiledQuery,
         return out.limit(k) if k is not None else out
     if len(ids) == 0:
         return spark.createDataFrame([], "doc_id long, score double")
-    cand = np.sort(ids.astype(np.uint64))
-    # top-k over a big membership set: the two-pass certificate plan
-    # (r5) — pass 1 ctx-only bounds restricted to the members, pass 2
-    # position-decodes only the certified prefix. Same exact kernel,
-    # byte-identical results (the pass-1 bound min-combines exactly
-    # the slots each member has — require_all=False nulls fall out of
-    # the least() chains). Small sets skip the extra job.
-    tids = [int(g.term_ids[0]) for g in cq.positive_groups]
-    if (k is not None and tids
-            and len(cand) >= conf.ref_two_pass_min_postings // 10):
-        dfs = rd.df_of(tids)
-        return _search_reference_two_pass(spark, rd, cq, k, conf, dfs,
-                                          candidate_docs=cand,
-                                          require_all=False)
+    # every membership-set size takes the same plan: the in-group bound
+    # min-combines exactly the slots (and pairs) each member has
     return _reference_exact(spark, rd, cq, k, conf,
-                            candidate_docs=cand, require_all=False)
+                            candidate_docs=np.sort(ids.astype(np.uint64)),
+                            require_all=False)
 
 
 def search_facets(spark: SparkSession, index_dir: str, query: str,

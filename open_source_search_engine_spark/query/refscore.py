@@ -384,6 +384,101 @@ def bound_factor_rows(pre: dict, row_of_post: np.ndarray, n_rows: int
     return u_rows, s_rows, g_rows, l_rows
 
 
+def pair_qdist(qpos_i: int, qpos_j: int, wiki_i: int, wiki_j: int,
+               quote_i: int, quote_j: int) -> int:
+    """The query distance ``pair_score_for_any`` subtracts for slots
+    (i, j): their query-position gap inside one wiki phrase or one
+    quoted run, else 2."""
+    if (wiki_i == wiki_j and wiki_j != 0) or (quote_i >= 0
+                                              and quote_i == quote_j):
+        return qpos_j - qpos_i
+    return 2
+
+
+def _slot_max_sum(vals: np.ndarray, doc: np.ndarray, mhg: np.ndarray,
+                  n_docs: int) -> np.ndarray:
+    """Per doc, the sum over distinct modified hashgroups of the max of
+    ``vals`` (mhg < 16, so (doc, mhg) packs into one sortable key)."""
+    key = doc * 16 + mhg
+    order = np.argsort(key, kind="stable")
+    ks = key[order]
+    starts = np.flatnonzero(np.concatenate(([True], ks[1:] != ks[:-1])))
+    return np.bincount(ks[starts] // 16,
+                       weights=np.maximum.reduceat(vals[order], starts),
+                       minlength=n_docs)
+
+
+def positional_pair_bounds(pre: dict, pix: np.ndarray,
+                           post_doc: np.ndarray, post_slot: np.ndarray,
+                           n_docs: int, pairs: list[tuple[int, int, int]],
+                           max_cross: int = 4096) -> np.ndarray:
+    """Sound per-doc upper bounds on ``pair_score_for_any`` totals (before
+    the tfw_i·tfw_j scaling) that read positions: every scored state is
+    a posting pair (a in slot i, b in slot j) scoring at most
+    100·g_a·g_b/(dist(a, b)+1), with g = den·hg·spam·syn and dist the
+    exact distance rule of ``pair_score_for_any`` (out-of-order
+    penalty, FIXED_DISTANCE, query distance). With no INLINKTEXT
+    posting on either side the kept slots carry distinct m1 AND
+    distinct m2 (see ``pair_factor_rows``), so
+        total_ij <= min(Σ_m1 max_{a∈m1, b} s(a,b), Σ_m2 max_{b∈m2, a} s(a,b)).
+    Unlike the ctx-only bound it pays each pair's real distance, which
+    is what separates low-scoring proximity-flat docs from the top-k.
+
+    ``pix`` indexes the chosen postings in ``pre``; ``post_doc`` (0 ..
+    n_docs-1) and ``post_slot`` label them. ``pairs`` lists (i, j,
+    qdist). Returns (n_docs, len(pairs)); inf where a doc misses a
+    slot, holds a link posting on either side, or has more than
+    ``max_cross`` posting pairs (callers keep their ctx-only bound)."""
+    g = (pre["denw"][pix].astype(np.float64)
+         * pre["hgw"][pix].astype(np.float64)
+         * pre["spamw"][pix].astype(np.float64)
+         * pre["synm"][pix].astype(np.float64))
+    pos = pre["pos"][pix]
+    mhg = pre["mhg"][pix]
+    link = pre["hg"][pix] == HASHGROUP_INLINKTEXT
+    out = np.full((n_docs, len(pairs)), np.inf)
+    for c, (i, j, qd) in enumerate(pairs):
+        a = np.flatnonzero(post_slot == i)
+        b = np.flatnonzero(post_slot == j)
+        a = a[np.argsort(post_doc[a], kind="stable")]
+        b = b[np.argsort(post_doc[b], kind="stable")]
+        na = np.bincount(post_doc[a], minlength=n_docs)
+        nb = np.bincount(post_doc[b], minlength=n_docs)
+        ok = ((na > 0) & (nb > 0) & (na * nb <= max_cross)
+              & (np.bincount(post_doc[a], weights=link[a], minlength=n_docs)
+                 == 0)
+              & (np.bincount(post_doc[b], weights=link[b], minlength=n_docs)
+                 == 0))
+        a = a[ok[post_doc[a]]]
+        b = b[ok[post_doc[b]]]
+        if not len(a):
+            continue
+        nb = np.bincount(post_doc[b], minlength=n_docs)
+        # every (a, b) pair of a doc: a-major runs of that doc's b's
+        rep = nb[post_doc[a]]
+        run = np.cumsum(rep) - rep
+        ia = np.repeat(np.arange(len(a)), rep)
+        ib = ((np.cumsum(nb) - nb)[post_doc[a]][ia]
+              + np.arange(len(ia)) - run[ia])
+        pa, pb = a[ia], b[ib]
+        d = pos[pb] - pos[pa]
+        dist = np.maximum(np.abs(d), 2)
+        dist = np.where((dist >= 50) & (mhg[pa] != mhg[pb]),
+                        FIXED_DISTANCE, dist)
+        ge = dist >= qd
+        dist = np.where(d >= 0, np.where(ge, dist - qd, dist),
+                        np.where(ge, dist - 1, dist + 1))
+        s = 100.0 * g[pa] * g[pb] / (dist + 1.0)
+        max_b = np.maximum.reduceat(s, run)
+        max_a = np.zeros(len(b))
+        np.maximum.at(max_a, ib, s)
+        bound = np.minimum(
+            _slot_max_sum(max_b, post_doc[a], mhg[a], n_docs),
+            _slot_max_sum(max_a, post_doc[b], mhg[b], n_docs))
+        out[ok, c] = bound[ok]
+    return out
+
+
 def _fill_termlist(tl, pre: dict, sl: slice, half_stop: bool):
     tl.pos = pre["pos"][sl]
     tl.hg = pre["hg"][sl]

@@ -413,8 +413,9 @@ def test_e2e_reference_page_temperature(spark, small_conf, tmp_path):
 
 @pytest.fixture(scope="module")
 def ref_two_pass_index(spark, small_conf, tmp_path_factory):
-    """~400 docs sharing 3 mid-df terms with varying tf/length/site so
-    scores spread — the shape the two-pass candidate plan targets."""
+    """~2,000 docs sharing 3 mid-df terms with varying tf/length/site
+    so scores spread — the shape the in-group bound certificate
+    targets; every group blob spans several 128-doc blocks."""
     import datetime as dt
 
     import pandas as pd
@@ -422,11 +423,13 @@ def ref_two_pass_index(spark, small_conf, tmp_path_factory):
     from open_source_search_engine_spark.index.build import build_index
 
     rows = []
-    for did in range(1, 401):
+    for did in range(1, 2001):
         body = ("apple " * (1 + did % 6)
                 + "banana " * (1 + did % 4)
                 + "cherry " * (1 + did % 3)
-                + "pad " * (did % 11))
+                # longer docs at higher ids: the best bounds cluster in
+                # the first blocks of each group blob
+                + "pad " * (did % 11 + did // 100))
         if did % 5 == 0:
             body += " mango"
         rows.append({
@@ -442,15 +445,6 @@ def ref_two_pass_index(spark, small_conf, tmp_path_factory):
     return d
 
 
-def _two_pass_conf(small_conf, **kw):
-    return EngineConf(scorer="reference",
-                      ref_two_pass_min_postings=1,  # force the plan
-                      n_buckets=small_conf.n_buckets,
-                      n_salts=small_conf.n_salts,
-                      salt_df_threshold=small_conf.salt_df_threshold,
-                      **kw)
-
-
 @pytest.mark.parametrize("q,k", [
     ("apple banana cherry", 10),
     ("apple banana", 25),
@@ -459,14 +453,14 @@ def _two_pass_conf(small_conf, **kw):
 ])
 def test_two_pass_matches_ground_truth(ref_two_pass_index, spark,
                                        small_conf, q, k):
-    """VERDICT r2 #2 'done' check: the two-pass candidate plan must be
+    """VERDICT r2 #2 'done' check: the bound-certified top-k must be
     byte-identical to the k=None exact ground truth."""
     from open_source_search_engine_spark.query.executor import (
         search,
         search_all,
     )
 
-    conf = _two_pass_conf(small_conf)
+    conf = _ref_conf(small_conf)
     truth = sorted(
         search_all(spark, ref_two_pass_index, q, conf=conf).collect(),
         key=lambda r: (-r["score"], r["doc_id"]))[:k]
@@ -474,28 +468,6 @@ def test_two_pass_matches_ground_truth(ref_two_pass_index, spark,
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in truth]
     for g, t in zip(got, truth):
         assert g["score"] == t["score"]  # same exact kernel: bit-equal
-
-
-def test_two_pass_routes_and_certifies(ref_two_pass_index, spark,
-                                       small_conf, monkeypatch):
-    """The plan actually runs pass 1 and terminates on the certificate
-    (no unbounded candidate expansion)."""
-    import open_source_search_engine_spark.query.executor as ex
-
-    calls = []
-    orig = ex._reference_candidates
-
-    def spy(*a, **kw):
-        calls.append(a[-1])  # fetch depth
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(ex, "_reference_candidates", spy)
-    got = ex.search(spark, ref_two_pass_index, "apple banana cherry",
-                    k=10, conf=_two_pass_conf(small_conf)).collect()
-    assert len(got) == 10
-    # pass 1 runs ONCE: certificate failures widen the candidate prefix
-    # from the collected ub list without re-decoding the termlists
-    assert calls == [65536]  # max(65536, 4 * max(256, 32k))
 
 
 def test_reference_mode_variant_sublists(spark, small_conf, tmp_path):
@@ -568,9 +540,10 @@ def test_reference_mode_variant_sublists(spark, small_conf, tmp_path):
 
 def test_two_pass_with_variants_matches_truth(ref_two_pass_index, spark,
                                               small_conf):
-    """Two-pass candidate plan + variant sublists: a doc reachable only
-    through a synonym must survive pass 1 (slot mapping includes syn
-    termlists) and the result must equal the single-pass ground truth."""
+    """Bound-certified top-k + variant sublists: a doc reachable only
+    through a synonym must be bounded through its slot (the slot mapping
+    includes syn termlists) and the result must equal the k=None ground
+    truth."""
     from open_source_search_engine_spark.functions.synonyms import (
         load_synonyms,
     )
@@ -581,7 +554,7 @@ def test_two_pass_with_variants_matches_truth(ref_two_pass_index, spark,
 
     load_synonyms({"kiwi": ("mango",)})  # 'kiwi' absent from the corpus
     try:
-        conf = _two_pass_conf(small_conf)
+        conf = _ref_conf(small_conf)
         truth = sorted(
             search_all(spark, ref_two_pass_index, "apple kiwi",
                        conf=conf, synonyms=True).collect(),
@@ -597,9 +570,9 @@ def test_two_pass_with_variants_matches_truth(ref_two_pass_index, spark,
 
 
 # ---------------------------------------------------------------------------
-# bound soundness (round 4): the two-pass certificate is only valid if
-# the per-doc upper bound dominates the exact score for EVERY posting
-# shape — property-tested over random termlists
+# bound soundness (round 4): the in-group top-k certificate is only
+# valid if the per-doc upper bound dominates the exact score for EVERY
+# posting shape — property-tested over random termlists
 # ---------------------------------------------------------------------------
 
 from hypothesis import given, settings
@@ -636,9 +609,9 @@ def _doc_terms(draw):
 
 
 def _batch_style_bound(tls, tfws, site_rank):
-    """The exact bound arithmetic of executor.score_batch /
-    _reference_candidates, re-derived here from the same refscore
-    helpers over one doc."""
+    """The exact bound arithmetic of the ``score_group`` body that
+    executor.make_reference_group returns, re-derived here from the
+    same refscore helpers over one doc."""
     import numpy as np
 
     from open_source_search_engine_spark.query.refscore import (
@@ -680,8 +653,8 @@ def test_candidate_bound_dominates_exact_score(doc):
     diversities, spam ranks, syn flags, 1-3 terms, any positions), the
     slot-structured single bound min-combined with the pair bound must
     be >= the exact score_doc result — the soundness invariant the
-    two-pass certificate rests on (an excluded doc's true score can
-    never exceed its bound)."""
+    in-group top-k certificate rests on (a doc past the heap break can
+    never score above its bound)."""
     import numpy as np
 
     terms, tfws, sr = doc
@@ -801,31 +774,18 @@ def test_single_term_routes_to_ctx_only(ref_anchor_index, spark,
 ])
 def test_boolean_reference_two_pass_matches_exhaustive(
         ref_two_pass_index, spark, small_conf, q, k):
-    """r5: boolean-reference top-k routes through the candidate-
-    restricted two-pass certificate plan (pass 1 ctx-only bounds over
-    the membership set, require_all=False) and must stay byte-identical
-    to the exhaustive k=None scoring."""
+    """r5: boolean-reference top-k (vote-buffer members as the
+    candidate set, require_all=False, in-group bounds over each
+    member's present slots and pairs) must stay byte-identical to the
+    exhaustive k=None scoring."""
     import open_source_search_engine_spark.query.executor as ex
 
-    conf = _two_pass_conf(small_conf)  # min_postings=1 -> always on
+    conf = _ref_conf(small_conf)
     truth = sorted(
         ex.search_all(spark, ref_two_pass_index, q, conf=conf).collect(),
         key=lambda r: (-r["score"], r["doc_id"]))[:k]
-    calls = []
-    orig = ex._search_reference_two_pass
-
-    def spy(*a, **kw):
-        calls.append(kw.get("require_all", a[-1] if len(a) > 7 else True))
-        return orig(*a, **kw)
-
-    ex_patch = ex._search_reference_two_pass
-    ex._search_reference_two_pass = spy
-    try:
-        got = ex.search(spark, ref_two_pass_index, q, k=k,
-                        conf=conf).collect()
-    finally:
-        ex._search_reference_two_pass = ex_patch
-    assert calls and calls[-1] is False  # the boolean plan engaged
+    got = ex.search(spark, ref_two_pass_index, q, k=k,
+                    conf=conf).collect()
     assert [(r["doc_id"], r["score"]) for r in got] \
         == [(r["doc_id"], r["score"]) for r in truth]
 
@@ -897,18 +857,32 @@ def test_single_term_ctx_only_on_anchor_free_multi_gen(
 # ---------------------------------------------------------------------------
 
 
-def test_reference_exact_is_one_python_stage(ref_index, spark, small_conf):
-    """A two-term reference top-k runs ONE pandas UDF node, the per-salt
+@pytest.mark.parametrize("index,q,syns", [
+    ("ref_index", "needle thread", False),
+    ("ref_two_pass_index", "apple banana -mango", False),
+    ("ref_two_pass_index", "apple kiwi", True),  # kiwi -> mango variant
+])
+def test_reference_exact_is_one_python_stage(request, spark, small_conf,
+                                             index, q, syns):
+    """A multi-term reference top-k (negative terms and synonym variants
+    included) runs ONE pandas UDF node, the per-salt
     FlatMapGroupsInPandas, with no MapInPandas decode stage; no exchange
     carries decoded positions or ctxs — only blob rows cross it."""
     import re
 
+    from open_source_search_engine_spark.functions.synonyms import (
+        load_synonyms,
+    )
     from open_source_search_engine_spark.query.executor import search
 
-    df = search(spark, ref_index, "needle thread", k=10,
-                conf=_ref_conf(small_conf))
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
+    load_synonyms({"kiwi": ("mango",)} if syns else {})
+    try:
+        df = search(spark, request.getfixturevalue(index), q, k=10,
+                    conf=_ref_conf(small_conf), synonyms=syns)
+        plan = spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+    finally:
+        load_synonyms({})
     tree, _, details = plan.partition("\n\n\n")
     udf_nodes = re.findall(r"\w*(?:InPandas|InArrow|EvalPython)\w*", tree)
     assert udf_nodes == ["FlatMapGroupsInPandas"]
@@ -918,6 +892,39 @@ def test_reference_exact_is_one_python_stage(ref_index, spark, small_conf):
     for cols in inputs:
         names = {c.split("#")[0].strip() for c in cols.split(",")}
         assert not names & {"positions", "ctxs"}, cols
+
+
+def test_reference_group_decodes_positions_lazily(ref_two_pass_index,
+                                                  spark, small_conf):
+    """Replays every salt group of a 2-term top-10 in-process on the
+    ``_wand_seg_frame`` rows: blobs decode ctx-only, and only the blocks
+    of docs the bound-ordered loop reaches get positions decoded —
+    fewer than the groups hold — while the merged top-k stays equal to
+    the k=None ground truth."""
+    import pandas as pd
+
+    import open_source_search_engine_spark.query.executor as ex
+
+    conf = _ref_conf(small_conf)
+    rd = ex.IndexReader(spark, ref_two_pass_index, conf)
+    cq = ex.compile_query("apple banana")
+    tids = [int(g.term_ids[0]) for g in cq.positive_groups]
+    n_salts = rd.meta["conf"]["n_salts"]
+    seg = ex._wand_seg_frame(rd, tids, n_salts).toPandas()
+    counters: dict = {}
+    fn = ex.make_reference_group(cq, rd.df_of(tids), rd.n_docs, conf, 10,
+                                 n_salts, events=rd.live_events(),
+                                 counters=counters)
+    got = pd.concat([fn(g) for _, g in seg.groupby("salt")])
+    top = sorted(zip(got["score"], got["doc_id"]),
+                 key=lambda t: (-t[0], t[1]))[:10]
+    truth = sorted(ex.search_all(spark, ref_two_pass_index, "apple banana",
+                                 conf=conf).collect(),
+                   key=lambda r: (-r["score"], r["doc_id"]))[:10]
+    assert counters["blocks"] > n_salts * len(tids)  # several per blob
+    assert counters["blocks_pos_decoded"] < counters["blocks"], counters
+    assert [(int(d), s) for s, d in top] \
+        == [(r["doc_id"], r["score"]) for r in truth]
 
 
 def test_reference_exact_multi_gen_matches_compacted(spark, small_conf,

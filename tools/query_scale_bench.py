@@ -8,7 +8,9 @@ term block-max WAND, in-decode phrase adjacency, reference scorer) —
 not selectivity luck.
 
 Usage: python tools/query_scale_bench.py [n_docs] [cpus]
-Prints one JSON line.
+Prints one JSON line; each timed entry reports its warm wall clock
+(``s``) and the Spark jobs that one call issued (``jobs``, counted by
+job group — a noise-free counter next to the noisy clock).
 """
 
 from __future__ import annotations
@@ -52,13 +54,20 @@ def main() -> int:
 
     rd = IndexReader(spark, idx)
     rd.avgdl
-    timings: dict[str, float] = {}
+    sc = spark.sparkContext
+    timings: dict[str, dict] = {}
 
     def timed(name, fn):
         fn()  # warm
+        sc.setJobGroup(name, name)
         t = time.time()
         fn()
-        timings[name] = round(time.time() - t, 3)
+        wall = round(time.time() - t, 3)
+        sc.setJobGroup("qscale-idle", "qscale-idle")
+        # the status tracker is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        timings[name] = {
+            "s": wall, "jobs": len(sc.statusTracker().getJobIdsForGroup(name))}
 
     # 'the'/'of'/'and' hit nearly every synthetic doc (Zipf stops)
     timed("and3_degenerate",
@@ -73,8 +82,8 @@ def main() -> int:
     timed("reference_3term",
           lambda: search(spark, idx, "the of and", k=10, conf=ref,
                          reader=rd).collect())
-    # 2-term (pair-bound-dominated) and 1-term (plateau certificate)
-    # reference shapes — the round-4 two-pass loop's worst cases
+    # 2-term (pair-bound-dominated) and 1-term (ctx-only plan) reference
+    # shapes: the 2-term bound plateaus hardest above the true scores
     timed("reference_2term",
           lambda: search(spark, idx, "the of", k=10, conf=ref,
                          reader=rd).collect())
