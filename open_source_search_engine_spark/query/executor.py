@@ -1996,7 +1996,7 @@ def make_reference_group(cq: CompiledQuery, dfs: dict[int, int],
         # ctx, so pre["pos"] is filled in per visited doc (lazy decode)
         pre = precompute_postings(pos_all, ctx_all, weights)
         post_row = np.repeat(np.arange(n_rows, dtype=np.int64), lens)
-        row_sum, pf_s, pf_g, pf_l = bound_factor_rows(pre, post_row,
+        row_sum, pf_s, pf_g, pf_m = bound_factor_rows(pre, post_row,
                                                       n_rows)
 
         # drop docs holding a live posting of a negative term, then put
@@ -2011,8 +2011,8 @@ def make_reference_group(cq: CompiledQuery, dfs: dict[int, int],
         doc_arr, tid_arr, rank_arr, slot_arr, src_arr, blk_arr = (
             doc_arr[rows], tid_arr[rows], rank_arr[rows], slot_arr[rows],
             src_arr[rows], blk_arr[rows])
-        row_sum, pf_s, pf_g, pf_l = (
-            row_sum[rows], pf_s[rows], pf_g[rows], pf_l[rows])
+        row_sum, pf_s, pf_g, pf_m = (
+            row_sum[rows], pf_s[rows], pf_g[rows], pf_m[rows])
         row_start, row_end = row_off[rows], row_off[rows + 1]
 
         bounds = np.flatnonzero(
@@ -2034,26 +2034,26 @@ def make_reference_group(cq: CompiledQuery, dfs: dict[int, int],
         covered = slot_seen.sum(axis=1)
         ub = np.where(slot_seen, slot_sum, np.inf).min(axis=1)
         if n_req >= 2:
-            # pair bound (see refscore.pair_factor_rows): min_pair
+            # pair bound (see refscore.bound_factor_rows): min_pair
             # binds on proximity-flat docs where the single bound
-            # plateaus above the true scores. Only pairs whose two slots
-            # the doc has are scored (a boolean-mode doc min-combines
-            # over its present slots), so only those bound it
+            # plateaus above the true scores. A slot's merged rows add
+            # their S, max their G and min their M. Only pairs whose two
+            # slots the doc has are scored (a boolean-mode doc
+            # min-combines over its present slots), so only those bound it
             s_slot = np.zeros((n_docs_b, n_req), dtype=np.float64)
             g_slot = np.zeros((n_docs_b, n_req), dtype=np.float64)
-            l_slot = np.zeros((n_docs_b, n_req), dtype=np.float64)
+            m_slot = np.full((n_docs_b, n_req), np.inf)
             np.add.at(s_slot, (doc_of_row, slot_arr), pf_s)
             np.maximum.at(g_slot, (doc_of_row, slot_arr), pf_g)
-            np.add.at(l_slot, (doc_of_row, slot_arr), pf_l)
+            np.minimum.at(m_slot, (doc_of_row, slot_arr), pf_m)
+            m_slot[~slot_seen] = 0.0
             for i in range(n_req):
                 for j in range(i + 1, n_req):
-                    c1 = s_slot[:, i] * g_slot[:, j]
-                    c2 = s_slot[:, j] * g_slot[:, i]
-                    nolink = (l_slot[:, i] == 0) & (l_slot[:, j] == 0)
-                    core = np.where(
-                        nolink, np.minimum(c1, c2),
-                        c1 + c2 + l_slot[:, i] * l_slot[:, j])
                     both = slot_seen[:, i] & slot_seen[:, j]
+                    si, sj = s_slot[:, i], s_slot[:, j]
+                    gi, gj = g_slot[:, i], g_slot[:, j]
+                    core = np.minimum(si * gj + (sj - m_slot[:, j]) * gi,
+                                      (si - m_slot[:, i]) * gj + sj * gi)
                     ub = np.minimum(ub, np.where(
                         both, core * (100.0 * tfw_of[i] * tfw_of[j]),
                         np.inf))

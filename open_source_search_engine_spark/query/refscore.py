@@ -203,47 +203,6 @@ def precompute_postings(pos_all: np.ndarray, ctx_all: np.ndarray,
             "synm": synm, "inbody": inbody, "mhg": mhg, "s_single": s}
 
 
-def slot_bound_rows(pre: dict, row_of_post: np.ndarray,
-                    n_rows: int, scores: np.ndarray | None = None
-                    ) -> np.ndarray:
-    """Sound per-row upper bound on the row's exact single-term ctx sum
-    (``single_term_score`` before the tfw² scaling), vectorized over
-    MANY (term, doc) rows at once: INLINKTEXT postings each occupy
-    their own slot (so they sum), non-link postings contribute at most
-    their max per distinct modified hashgroup. Summing ALL slot maxima
-    dominates the exact path's MAX_TOP-capped, creation-ordered F32 sum
-    for every eviction order, so this bounds it from above (up to f32
-    vs f64 rounding — callers keep the ×1.001 margin). Replaces the
-    old sum-of-every-posting bound, which was ~tf× looser on stopword
-    docs (a tf-50 body term bounded at 50× its real slot max).
-
-    ``scores`` overrides the per-posting score array (default
-    ``s_single``) — the pair bound reuses the same slot structure over
-    the pair-formula factor g = den·hg·spam·syn."""
-    s64 = (pre["s_single"] if scores is None else scores).astype(
-        np.float64)
-    hg = pre["hg"]
-    is_link = hg == HASHGROUP_INLINKTEXT
-    out = np.zeros(n_rows, dtype=np.float64)
-    if is_link.any():
-        out += np.bincount(row_of_post[is_link], weights=s64[is_link],
-                           minlength=n_rows)
-    nl = ~is_link
-    if nl.any():
-        # mhg folds in-body hashgroups to BODY and is < 16 (Posdb.h
-        # MAXHASHGROUP), so (row, mhg) packs into one sortable key
-        key = row_of_post[nl] * 16 + pre["mhg"][nl]
-        order = np.argsort(key, kind="stable")
-        ks = key[order]
-        vs = s64[nl][order]
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks[1:] != ks[:-1])))
-        gmax = np.maximum.reduceat(vs, starts)
-        out += np.bincount((ks[starts] // 16).astype(np.int64),
-                           weights=gmax, minlength=n_rows)
-    return out
-
-
 def exact_single_rows(pre: dict, row_of_post: np.ndarray, n_rows: int
                       ) -> tuple[np.ndarray, np.ndarray]:
     """EXACT ``single_term_score`` ctx sums (before the tfw² scaling),
@@ -295,93 +254,71 @@ def exact_single_rows(pre: dict, row_of_post: np.ndarray, n_rows: int
     return tot, ok
 
 
-def pair_factor_rows(pre: dict, row_of_post: np.ndarray, n_rows: int
-                     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-row factors for a sound PAIR-score upper bound. Every pair
-    state scores 100·g_i·g_j/(dist+1) with g = den·hg·spam·syn — NO
-    diversity, unsquared — and divisor >= 1 (getTermPairScoreForAny /
-    getScoreForTermPair). The pair total is a slot sum whose
-    brotherhood rule collapses non-link states on m1 OR m2 match, so
-    with NO INLINKTEXT postings on either side the slots carry
-    all-distinct m1 AND all-distinct m2 and
-        total_ij <= 100·min(S_i·G_j, S_j·G_i);
-    with link postings present, link states never collapse on their
-    own side and the sound bound is the full decomposition
-        total_ij <= 100·(S_i·G_j + S_j·G_i + L_i·L_j).
-    Returns (S_rows, G_rows, L_rows):
-      S = slot-structured sum of g over NON-link postings
-          (distinct-mhg maxima),
-      G = plain max of g over ALL postings,
-      L = sum of g over INLINKTEXT postings (0 for most docs)."""
-    g = (pre["denw"].astype(np.float64)
-         * pre["hgw"].astype(np.float64)
-         * pre["spamw"].astype(np.float64)
-         * pre["synm"].astype(np.float64))
-    hg = pre["hg"]
-    is_link = hg == HASHGROUP_INLINKTEXT
-    s_rows = np.zeros(n_rows, dtype=np.float64)
-    nl = ~is_link
-    if nl.any():
-        key = row_of_post[nl] * 16 + pre["mhg"][nl]
-        order = np.argsort(key, kind="stable")
-        ks = key[order]
-        vs = g[nl][order]
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks[1:] != ks[:-1])))
-        gmax = np.maximum.reduceat(vs, starts)
-        s_rows += np.bincount((ks[starts] // 16).astype(np.int64),
-                              weights=gmax, minlength=n_rows)
-    l_rows = np.zeros(n_rows, dtype=np.float64)
-    if is_link.any():
-        l_rows += np.bincount(row_of_post[is_link],
-                              weights=g[is_link], minlength=n_rows)
-    g_rows = np.zeros(n_rows, dtype=np.float64)
-    np.maximum.at(g_rows, row_of_post, g)
-    return s_rows, g_rows, l_rows
+def _charged_sums(c: np.ndarray, row: np.ndarray, body: np.ndarray,
+                  n_rows: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per row, ``(A, M)`` over the postings ``getTermPairScoreForAny``
+    can scan: every non-body posting plus ONE body posting (the window
+    winner; any other body position is skipped). A = Σ_non-body c +
+    max_body c, the most those postings can carry; M = min(min_non-body
+    c, max_body c), the least of them when the winner is the max-c body
+    posting — the choice that maximizes A - M, so A - M bounds
+    Σ c - min c over every possible winner. Rows without postings get
+    A = 0 and M = inf."""
+    a = np.bincount(row[~body], weights=c[~body], minlength=n_rows)
+    bmax = np.full(n_rows, -np.inf)
+    np.maximum.at(bmax, row[body], c[body])
+    m = np.full(n_rows, np.inf)
+    np.minimum.at(m, row[~body], c[~body])
+    has_body = bmax > -np.inf
+    a = a + np.where(has_body, bmax, 0.0)
+    return a, np.where(has_body, np.minimum(m, bmax), m)
 
 
 def bound_factor_rows(pre: dict, row_of_post: np.ndarray, n_rows: int
                       ) -> tuple[np.ndarray, np.ndarray, np.ndarray,
                                  np.ndarray]:
-    """Fused ``slot_bound_rows`` + ``pair_factor_rows``: one shared
-    (row, mhg) sort serves both slot structures (the sort is the
-    dominant cost over millions of postings). Returns (U, S, G, L):
-      U = slot-structured sum of s_single (single-score bound),
-      S = slot-structured sum of g over non-link postings,
-      G = max of g over all postings,
-      L = sum of g over INLINKTEXT postings."""
+    """Per-row factors of the ctx-only doc bound, vectorized over MANY
+    (term, doc) rows at once. Returns (U, S, G, M):
+      U = slot-structured sum of s_single: INLINKTEXT postings each own
+          a slot, every other posting adds at most its max per distinct
+          modified hashgroup. That dominates ``single_term_score``'s
+          MAX_TOP-capped, creation-ordered f32 sum for every eviction
+          order (callers keep a ×1.001 margin for f32 rounding);
+      S, M = ``_charged_sums`` of the pair factor g = den·hg·spam·syn
+          (no diversity, unsquared);
+      G = max of g over all postings.
+    Every pair state scores 100·g_a·g_b/(dist+1) with divisor >= 1
+    (getTermPairScoreForAny), so with c = 100·g·G_other the charging
+    argument of ``positional_pair_bounds`` gives
+        total_ij <= 100·min(S_i·G_j + (S_j - M_j)·G_i,
+                            (S_i - M_i)·G_j + S_j·G_i)."""
     s64 = pre["s_single"].astype(np.float64)
     g = (pre["denw"].astype(np.float64)
          * pre["hgw"].astype(np.float64)
          * pre["spamw"].astype(np.float64)
          * pre["synm"].astype(np.float64))
-    hg = pre["hg"]
-    is_link = hg == HASHGROUP_INLINKTEXT
+    is_link = pre["hg"] == HASHGROUP_INLINKTEXT
     u_rows = np.zeros(n_rows, dtype=np.float64)
-    s_rows = np.zeros(n_rows, dtype=np.float64)
-    l_rows = np.zeros(n_rows, dtype=np.float64)
     nl = ~is_link
     if nl.any():
+        # mhg folds in-body hashgroups to BODY and is < 16 (Posdb.h
+        # MAXHASHGROUP), so (row, mhg) packs into one sortable key
         key = row_of_post[nl] * 16 + pre["mhg"][nl]
         order = np.argsort(key, kind="stable")
         ks = key[order]
         starts = np.flatnonzero(
             np.concatenate(([True], ks[1:] != ks[:-1])))
-        gkeys = (ks[starts] // 16).astype(np.int64)
         u_rows += np.bincount(
-            gkeys, weights=np.maximum.reduceat(s64[nl][order], starts),
-            minlength=n_rows)
-        s_rows += np.bincount(
-            gkeys, weights=np.maximum.reduceat(g[nl][order], starts),
+            (ks[starts] // 16).astype(np.int64),
+            weights=np.maximum.reduceat(s64[nl][order], starts),
             minlength=n_rows)
     if is_link.any():
         u_rows += np.bincount(row_of_post[is_link],
                               weights=s64[is_link], minlength=n_rows)
-        l_rows += np.bincount(row_of_post[is_link],
-                              weights=g[is_link], minlength=n_rows)
+    s_rows, m_rows = _charged_sums(g, row_of_post, pre["inbody"], n_rows)
     g_rows = np.zeros(n_rows, dtype=np.float64)
     np.maximum.at(g_rows, row_of_post, g)
-    return u_rows, s_rows, g_rows, l_rows
+    return u_rows, s_rows, g_rows, m_rows
 
 
 def pair_qdist(qpos_i: int, qpos_j: int, wiki_i: int, wiki_j: int,
@@ -395,47 +332,40 @@ def pair_qdist(qpos_i: int, qpos_j: int, wiki_i: int, wiki_j: int,
     return 2
 
 
-def _slot_max_sum(vals: np.ndarray, doc: np.ndarray, mhg: np.ndarray,
-                  n_docs: int) -> np.ndarray:
-    """Per doc, the sum over distinct modified hashgroups of the max of
-    ``vals`` (mhg < 16, so (doc, mhg) packs into one sortable key)."""
-    key = doc * 16 + mhg
-    order = np.argsort(key, kind="stable")
-    ks = key[order]
-    starts = np.flatnonzero(np.concatenate(([True], ks[1:] != ks[:-1])))
-    return np.bincount(ks[starts] // 16,
-                       weights=np.maximum.reduceat(vals[order], starts),
-                       minlength=n_docs)
-
-
 def positional_pair_bounds(pre: dict, pix: np.ndarray,
                            post_doc: np.ndarray, post_slot: np.ndarray,
                            n_docs: int, pairs: list[tuple[int, int, int]],
                            max_cross: int = 4096) -> np.ndarray:
     """Sound per-doc upper bounds on ``pair_score_for_any`` totals (before
-    the tfw_i·tfw_j scaling) that read positions: every scored state is
-    a posting pair (a in slot i, b in slot j) scoring at most
-    100·g_a·g_b/(dist(a, b)+1), with g = den·hg·spam·syn and dist the
-    exact distance rule of ``pair_score_for_any`` (out-of-order
-    penalty, FIXED_DISTANCE, query distance). With no INLINKTEXT
-    posting on either side the kept slots carry distinct m1 AND
-    distinct m2 (see ``pair_factor_rows``), so
-        total_ij <= min(Σ_m1 max_{a∈m1, b} s(a,b), Σ_m2 max_{b∈m2, a} s(a,b)).
-    Unlike the ctx-only bound it pays each pair's real distance, which
-    is what separates low-scoring proximity-flat docs from the top-k.
+    the tfw_i·tfw_j scaling) that read positions.
+
+    The total sums at most MAX_TOP slots, each holding the score of a
+    distinct state of the co-advancing scan. The scan walks a monotone
+    path: its first state is (a0, b0) and every later state is the
+    first one at the posting just advanced to, so charging the first
+    state to a0 and each later state to that posting charges every
+    posting but b0 at most once. With c_a = max_b s(a, b) and
+    c_b = max_a s(a, b), where s = 100·g_a·g_b/(dist(a, b)+1) under the
+    exact distance rule of ``pair_score_for_any`` (out-of-order penalty,
+    FIXED_DISTANCE, query distance),
+        total_ij <= min(A_i + A_j - M_j, A_i - M_i + A_j)
+    with (A, M) the ``_charged_sums`` of each side (charging the first
+    state to b0 instead gives the second term). Unlike the ctx-only
+    bound it pays each pair's real distance, which is what separates
+    low-scoring proximity-flat docs from the top-k.
 
     ``pix`` indexes the chosen postings in ``pre``; ``post_doc`` (0 ..
     n_docs-1) and ``post_slot`` label them. ``pairs`` lists (i, j,
     qdist). Returns (n_docs, len(pairs)); inf where a doc misses a
-    slot, holds a link posting on either side, or has more than
-    ``max_cross`` posting pairs (callers keep their ctx-only bound)."""
+    slot or has more than ``max_cross`` posting pairs (callers keep
+    their ctx-only bound)."""
     g = (pre["denw"][pix].astype(np.float64)
          * pre["hgw"][pix].astype(np.float64)
          * pre["spamw"][pix].astype(np.float64)
          * pre["synm"][pix].astype(np.float64))
     pos = pre["pos"][pix]
     mhg = pre["mhg"][pix]
-    link = pre["hg"][pix] == HASHGROUP_INLINKTEXT
+    body = pre["inbody"][pix]
     out = np.full((n_docs, len(pairs)), np.inf)
     for c, (i, j, qd) in enumerate(pairs):
         a = np.flatnonzero(post_slot == i)
@@ -444,11 +374,7 @@ def positional_pair_bounds(pre: dict, pix: np.ndarray,
         b = b[np.argsort(post_doc[b], kind="stable")]
         na = np.bincount(post_doc[a], minlength=n_docs)
         nb = np.bincount(post_doc[b], minlength=n_docs)
-        ok = ((na > 0) & (nb > 0) & (na * nb <= max_cross)
-              & (np.bincount(post_doc[a], weights=link[a], minlength=n_docs)
-                 == 0)
-              & (np.bincount(post_doc[b], weights=link[b], minlength=n_docs)
-                 == 0))
+        ok = (na > 0) & (nb > 0) & (na * nb <= max_cross)
         a = a[ok[post_doc[a]]]
         b = b[ok[post_doc[b]]]
         if not len(a):
@@ -463,18 +389,19 @@ def positional_pair_bounds(pre: dict, pix: np.ndarray,
         pa, pb = a[ia], b[ib]
         d = pos[pb] - pos[pa]
         dist = np.maximum(np.abs(d), 2)
-        dist = np.where((dist >= 50) & (mhg[pa] != mhg[pb]),
-                        FIXED_DISTANCE, dist)
+        fixed = (dist >= 50) & ((mhg[pa] != mhg[pb])
+                                | (mhg[pa] == HASHGROUP_INLINKTEXT))
+        dist = np.where(fixed, FIXED_DISTANCE, dist)
         ge = dist >= qd
         dist = np.where(d >= 0, np.where(ge, dist - qd, dist),
                         np.where(ge, dist - 1, dist + 1))
         s = 100.0 * g[pa] * g[pb] / (dist + 1.0)
-        max_b = np.maximum.reduceat(s, run)
-        max_a = np.zeros(len(b))
-        np.maximum.at(max_a, ib, s)
-        bound = np.minimum(
-            _slot_max_sum(max_b, post_doc[a], mhg[a], n_docs),
-            _slot_max_sum(max_a, post_doc[b], mhg[b], n_docs))
+        c_a = np.maximum.reduceat(s, run)
+        c_b = np.zeros(len(b))
+        np.maximum.at(c_b, ib, s)
+        a_i, m_i = _charged_sums(c_a, post_doc[a], body[a], n_docs)
+        a_j, m_j = _charged_sums(c_b, post_doc[b], body[b], n_docs)
+        bound = np.minimum(a_i + a_j - m_j, a_i - m_i + a_j)
         out[ok, c] = bound[ok]
     return out
 

@@ -20,6 +20,7 @@ from open_source_search_engine_spark.functions.posdb import (
     pack_ctx,
 )
 from open_source_search_engine_spark.query.refscore import (
+    _IN_BODY,
     MAX_TOP,
     SITERANK_MULTIPLIER,
     ScoringWeights,
@@ -575,7 +576,7 @@ def test_two_pass_with_variants_matches_truth(ref_two_pass_index, spark,
 # posting shape — property-tested over random termlists
 # ---------------------------------------------------------------------------
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -626,18 +627,14 @@ def _batch_style_bound(tls, tfws, site_rank):
     lens = np.array([len(t[0]) for t in tls], dtype=np.int64)
     row_of = np.repeat(np.arange(n_req, dtype=np.int64), lens)
     pre = precompute_postings(pos_all, ctx_all, W)
-    u, s, g, l = bound_factor_rows(pre, row_of, n_req)
+    u, s, g, m = bound_factor_rows(pre, row_of, n_req)
     ub = min(u[i] * tfws[i] * tfws[i] for i in range(n_req))
     if n_req >= 2:
         pair_ub = float("inf")
         for i in range(n_req):
             for j in range(i + 1, n_req):
-                c1 = s[i] * g[j]
-                c2 = s[j] * g[i]
-                if l[i] == 0 and l[j] == 0:
-                    core = min(c1, c2)
-                else:
-                    core = c1 + c2 + l[i] * l[j]
+                core = min(s[i] * g[j] + (s[j] - m[j]) * g[i],
+                           (s[i] - m[i]) * g[j] + s[j] * g[i])
                 pair_ub = min(pair_ub,
                               core * 100.0 * tfws[i] * tfws[j])
         ub = min(ub, pair_ub)
@@ -666,6 +663,76 @@ def test_candidate_bound_dominates_exact_score(doc):
         return  # doc skipped by the reference (minScore <= 0)
     bound = _batch_style_bound(terms, tfws, sr)
     assert bound >= exact, (terms, tfws, sr, exact, bound)
+
+
+@st.composite
+def _pair_doc(draw):
+    """Two terms over every hashgroup (several non-body modified
+    hashgroups per side), with a wiki phrase or a quoted run, and any
+    window winner: -1 or one of the term's body postings."""
+    terms, wins = [], []
+    link = draw(st.booleans())
+    hgs = [h for h in range(11) if link or h != HASHGROUP_INLINKTEXT]
+    for _ in range(2):
+        n = draw(st.integers(1, 8))
+        poss = sorted(draw(st.lists(st.integers(0, 300), min_size=n,
+                                    max_size=n)))
+        hg = draw(st.lists(st.sampled_from(hgs), min_size=n, max_size=n))
+        ctxs = [ctx(hg=h,
+                    den=draw(st.integers(0, MAXDENSITYRANK)),
+                    div=draw(st.integers(0, MAXDIVERSITYRANK)),
+                    spam=draw(st.integers(0, MAXWORDSPAMRANK)),
+                    syn=draw(st.integers(0, 1))) for h in hg]
+        body = [i for i, h in enumerate(hg) if _IN_BODY[h]]
+        wins.append(draw(st.sampled_from([-1] + body)))
+        terms.append((poss, ctxs))
+    qpos = sorted(draw(st.lists(st.integers(0, 6), min_size=2,
+                                max_size=2, unique=True)))
+    wiki = draw(st.sampled_from([0, 1]))
+    quote = draw(st.sampled_from([-1, 0]))
+    return terms, wins, qpos, wiki, quote
+
+
+@settings(max_examples=300, deadline=None)
+@given(_pair_doc())
+# title + body against meta + body: the body state (1, 1) joins the
+# title-labelled slot through its m2, leaving two slots labelled m2 =
+# BODY, which a one-max-per-m2-hashgroup bound counts once
+@example(([([0, 0, 0, 0, 0, 0, 1, 1], [0, 0, 0, 0, 0, 32768, 0, 32768]),
+           ([0, 0, 0, 1], [0, 0, 131072, 0])], [6, 3], [0, 2], 0, -1))
+def test_pair_bounds_dominate_pair_total(doc):
+    """Both pair bounds of ``score_group`` — the ctx-only one from
+    ``bound_factor_rows`` and the position-reading
+    ``positional_pair_bounds`` — must dominate the ``pair_score_for_any``
+    total for any window winner. Slots sharing a modified hashgroup on
+    one side can both survive (a state joins the first slot matching
+    either side), so a bound summing one max per hashgroup of one side
+    undercuts such totals."""
+    from open_source_search_engine_spark.query.refscore import (
+        bound_factor_rows,
+        pair_qdist,
+        pair_score_for_any,
+        positional_pair_bounds,
+        precompute_postings,
+    )
+
+    terms, wins, qpos, wiki, quote = doc
+    tls = [tl(p, c) for p, c in terms]
+    tp = pair_score_for_any(tls[0], tls[1], qpos[0], qpos[1], wiki, wiki,
+                            quote, quote, wins[0], wins[1], 1.0, 1.0, W)
+    pos_all = np.concatenate([np.asarray(p, np.int64) for p, _ in terms])
+    ctx_all = np.concatenate([np.asarray(c, np.int64) for _, c in terms])
+    slot = np.repeat([0, 1], [len(p) for p, _ in terms])
+    pre = precompute_postings(pos_all, ctx_all, W)
+    u, s, g, m = bound_factor_rows(pre, slot, 2)
+    ctx_ub = 100.0 * min(s[0] * g[1] + (s[1] - m[1]) * g[0],
+                         (s[0] - m[0]) * g[1] + s[1] * g[0])
+    qd = pair_qdist(qpos[0], qpos[1], wiki, wiki, quote, quote)
+    pos_ub = positional_pair_bounds(
+        pre, np.arange(len(pos_all)), np.zeros(len(pos_all), np.int64),
+        slot, 1, [(0, 1, qd)])[0, 0]
+    assert ctx_ub * 1.001 >= tp, (doc, float(tp), ctx_ub)
+    assert pos_ub * 1.001 >= tp, (doc, float(tp), pos_ub)
 
 
 # ---------------------------------------------------------------------------
